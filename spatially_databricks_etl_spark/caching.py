@@ -42,3 +42,20 @@ def release_intermediates(df: DataFrame, *, blocking: bool = False) -> None:
     for f in getattr(df, _ATTR, []):
         f.unpersist(blocking=blocking)
     setattr(df, _ATTR, [])
+
+
+def unpersist_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a SUPERSEDED local checkpoint: unpersist the
+    RDD(s) behind ``df``'s ``LogicalRDD`` leaves. ``localCheckpoint``
+    persists its RDD outside the cache manager, so neither
+    ``DataFrame.unpersist`` nor :func:`release_intermediates` reaches
+    it, and the blocks otherwise stay until a JVM garbage collection
+    lets Spark's ContextCleaner reclaim them. Call it only on a frame
+    that IS a checkpoint (not on something derived from one) and only
+    once every frame that still reads it has been checkpointed in turn
+    — a later read of an unpersisted checkpoint fails."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.length()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            leaf.rdd().unpersist(False)

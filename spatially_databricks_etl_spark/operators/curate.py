@@ -20,7 +20,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from spatially_databricks_etl_spark.caching import release_intermediates
+from spatially_databricks_etl_spark.caching import (
+    release_intermediates,
+    unpersist_checkpoint,
+)
 from spatially_databricks_etl_spark.functions.text import quality_score
 from spatially_databricks_etl_spark.operators.dedup import (
     exact_dedup,
@@ -1323,9 +1326,11 @@ def connected_components(
     on the joined row, no compare-join against the previous state and
     no second pass). ``localCheckpoint`` truncates lineage so the plan
     doesn't grow with iterations (use reliable ``checkpoint`` with a
-    cluster checkpoint dir in production). Early-stops as soon as an
-    iteration changes no label. For near-dup graphs the iteration
-    count is the cluster diameter, not corpus size.
+    cluster checkpoint dir in production); each checkpoint frees the
+    one it supersedes, and the edge list's is freed on return, so the
+    result holds only its own labels checkpoint. Early-stops as soon
+    as an iteration changes no label. For near-dup graphs the
+    iteration count is the cluster diameter, not corpus size.
     """
     from pyspark.sql import Observation
 
@@ -1348,7 +1353,7 @@ def connected_components(
             n_edges // 200_000 + 1,
         ),
     )
-    sym = sym.repartition(parts, "b").localCheckpoint(eager=True)
+    sym = _superseding(sym, sym.repartition(parts, "b").localCheckpoint(eager=True))
     labels = (
         sym.select(F.col("a").alias("id")).distinct().withColumn("label", F.col("id"))
     )
@@ -1379,7 +1384,8 @@ def connected_components(
             .repartition(parts, "id")
             .localCheckpoint(eager=True)
         )
-        labels = new_labels
+        # the first labels frame derives from sym, it is no checkpoint
+        labels = _superseding(labels, new_labels) if i else new_labels
         changed = int(obs.get["changed"])
         if changed == 0:
             break
@@ -1396,6 +1402,8 @@ def connected_components(
                 f"the budget; raise max_iterations or pass "
                 f"require_convergence=False for the fixed-sweep state"
             )
+    if max_iterations > 0:  # else the labels still derive from sym
+        unpersist_checkpoint(sym)  # the labels checkpoint no longer reads it
     return labels.select("id", F.col("label").alias("component"))
 
 
@@ -1537,10 +1545,13 @@ def _curation_stages(
             d2, text_col=text_col, id_col=id_col, threshold=near_threshold
         )
     comp = connected_components(pairs)
-    # connected_components eagerly localCheckpoints the edge list, so
-    # the pair DAG (and the minhash persists behind it) is fully
-    # consumed by the time it returns — release the cached blocks now.
-    release_intermediates(pairs)
+    if near_pairs is None:
+        # connected_components eagerly localCheckpoints the edge list,
+        # so the pair DAG (and the minhash persists behind it) is fully
+        # consumed by the time it returns — release the cached blocks
+        # now. Caller-supplied ``near_pairs`` stay the caller's to
+        # release: the frame derived from them here carries no hook.
+        release_intermediates(pairs)
     non_reps = comp.filter(F.col("id") != F.col("component")).select(
         F.col("id").alias(id_col)
     )
@@ -1569,6 +1580,12 @@ def curate_funnel(
     persist is the in-session stand-in). Release via
     ``caching.release_intermediates(result)``. Counts are plain
     aggregates unioned into one frame — no driver-side loops.
+
+    ``near_pairs`` (see :func:`curate_corpus`) is the CALLER's frame:
+    the funnel neither persists nor releases it, so a caller passing
+    an operator result such as ``minhash_near_dedup(...)`` releases
+    that result itself once the funnel is materialized. Pairs the
+    funnel generates itself are released before it returns.
     """
     from spatially_databricks_etl_spark.caching import register_persists
 
@@ -2665,6 +2682,13 @@ def _bpe_apply_merge(
     )
 
 
+def _superseding(old: DataFrame, new: DataFrame) -> DataFrame:
+    """Return the eagerly checkpointed ``new`` after freeing the local
+    checkpoint ``old`` it supersedes (``new`` no longer reads it)."""
+    unpersist_checkpoint(old)
+    return new
+
+
 def _bpe_rounds(
     docs: DataFrame,
     *,
@@ -2695,6 +2719,10 @@ def _bpe_rounds(
     and makes the merge table itself a driver-local relation. The
     collect is O(1) — one (sym, sym, count, score) row per round —
     so it adds no scale constraint at any corpus size.
+
+    Each round's checkpoint frees the one it supersedes
+    (:func:`caching.unpersist_checkpoint`), so a training run holds
+    one symbol-table checkpoint, the returned one.
 
     ``scoring`` selects the arg-max rule: ``"freq"`` is classic BPE
     (highest pair count); ``"likelihood"`` is WordPiece (Schuster &
@@ -2732,7 +2760,7 @@ def _bpe_rounds(
             n_syms // 200_000 + 1,
         ),
     )
-    syms = syms.repartition(parts, "word").localCheckpoint(eager=True)
+    syms = _superseding(syms, syms.repartition(parts, "word").localCheckpoint(eager=True))
     wpos = Window.partitionBy("word").orderBy("pos")
     merge_rows: list[tuple] = []
     for rnd in range(1, merges + 1):
@@ -2799,10 +2827,11 @@ def _bpe_rounds(
         pair = docs.sparkSession.createDataFrame(
             [(t["__a"], t["__b"])], "__a string, __b string"
         )
-        syms = (
+        syms = _superseding(
+            syms,
             _bpe_apply_merge(syms, pair, carry=["word", "freq"])
             .repartition(parts, "word")
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=True),
         )
     merges_df = docs.sparkSession.createDataFrame(
         merge_rows,
@@ -2842,9 +2871,11 @@ def bpe_train(
     driver-side (O(1) — one winning pair per round, at any corpus
     size), and the pair re-enters the merge apply as a broadcast
     local relation: no O(corpus) step after the first scan."""
-    return _bpe_rounds(
+    merges_df, syms = _bpe_rounds(
         docs, text_col=text_col, merges=merges, pattern=pattern, lowercase=lowercase
-    )[0].select("round", "left_sym", "right_sym", "pair_count")
+    )
+    unpersist_checkpoint(syms)  # the merge table is driver-local rows
+    return merges_df.select("round", "left_sym", "right_sym", "pair_count")
 
 
 def wordpiece_train(
@@ -2873,14 +2904,16 @@ def wordpiece_train(
     table adds one vocabulary-sized aggregate per round. The merge
     rules feed :func:`bpe_encode` unchanged (application semantics
     are identical — only the selection rule differs)."""
-    return _bpe_rounds(
+    merges_df, syms = _bpe_rounds(
         docs,
         text_col=text_col,
         merges=merges,
         pattern=pattern,
         lowercase=lowercase,
         scoring="likelihood",
-    )[0]
+    )
+    unpersist_checkpoint(syms)  # the merge table is driver-local rows
+    return merges_df
 
 
 def bpe_token_freq(

@@ -24,6 +24,7 @@ from pyspark.storagelevel import StorageLevel
 from spatially_databricks_etl_spark.caching import register_persists
 from spatially_databricks_etl_spark.functions.text import ngrams, tokens
 from spatially_databricks_etl_spark.operators.relational import ensure_parallelism
+from spatially_databricks_etl_spark.operators.similarity import ANN_MAX_QUERIES
 
 
 def exact_dedup(df: DataFrame, subset: list[str], *, keep_by: str | None = None) -> DataFrame:
@@ -268,23 +269,27 @@ def _band_rows(sig_df: DataFrame, *, bands: int, rows: int) -> DataFrame:
     by the self-join dedup and the persisted-index write/search paths
     so both produce bit-identical bucket keys."""
     return sig_df.select(
-        "__id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            F.concat_ws("_", F.slice("__sig", b * rows + 1, rows)),
-                            F.lit(b),
-                        ).alias("band_hash"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("__b"),
+        "__id", F.explode(_band_structs(bands=bands, rows=rows)).alias("__b")
     ).select(
         "__id", F.col("__b.band").alias("__band"), F.col("__b.band_hash").alias("__bh")
+    )
+
+
+def _band_structs(*, bands: int, rows: int) -> Column:
+    """``array<struct<band, band_hash>>`` of the ``__sig`` column — the
+    one definition of the band keys (:func:`_band_rows` explodes it;
+    the persisted-index search routes its batch with it)."""
+    return F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.xxhash64(
+                    F.concat_ws("_", F.slice("__sig", b * rows + 1, rows)),
+                    F.lit(b),
+                ).alias("band_hash"),
+            )
+            for b in range(bands)
+        ]
     )
 
 
@@ -1150,20 +1155,23 @@ def minhash_search_index(
     id_col: str = "doc_id",
     threshold: float = 0.7,
     allowed_ids: DataFrame | None = None,
+    max_queries: int | None = ANN_MAX_QUERIES,
 ) -> DataFrame:
     """Find near-duplicates of a (small) ingest ``batch`` against a
     persisted MinHash index (:func:`minhash_write_index`). Returns
     (batch_id, indexed_id, jaccard_sim) — exact Jaccard on the stored
     shingle codes, same guarantees as :func:`minhash_near_dedup`.
 
-    Plan shape: the batch pays shingle+signature once (it is the small
-    side); its band rows BROADCAST into a join against the index's
-    band store restricted by a STATIC ``__bhb`` partition filter, so
-    the corpus-scale band table is read only under the batch's hash
-    directories; candidate pairs dedupe across bands, then the verify
-    join reads only the candidate ids' ``__pb`` directories of the
-    shingle store. The indexed corpus is never re-shingled, never
-    re-signed, and never scanned in full.
+    Plan shape: the batch pays shingle+signature+banding once, inside
+    the ONE collect of the batch (:func:`indexstore.collect_probe_batch`;
+    more than ``max_queries`` documents raise, ``None`` opts out); its
+    band rows, built as one Arrow table, BROADCAST into a join against
+    the index's band store read from the batch's ``__bhb`` directories
+    only (STATIC partition filter); candidate pairs dedupe across
+    bands, then the verify join reads only the candidate ids' ``__pb``
+    directories of the shingle store. The indexed corpus is never
+    re-shingled, never re-signed, and never scanned in full, and the
+    caller's batch is never read again.
 
     Read-vs-writer concurrency, stated honestly: a search overlapping
     a live upsert's swap window — or running after a CRASHED upsert
@@ -1175,7 +1183,12 @@ def minhash_search_index(
     (SCALE.md "Dependency gates").
     """
     from spatially_databricks_etl_spark.operators.indexstore import (
+        anti_tombstones,
+        apply_allowed_ids,
+        collect_probe_batch,
+        probe_frame,
         read_meta_sidecar,
+        read_probed_partitions,
     )
 
     spark = batch.sparkSession
@@ -1185,34 +1198,55 @@ def minhash_search_index(
     rows = num_hashes // bands
     src = batch.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__text"))
     sh = ngrams(F.col("__text"), meta["shingle_size"], character=True)
-    b_base = (
-        src.select("__id", shingle_hashes(sh, seed=seed, mask32=False).alias("__h"))
-        .filter(F.size("__h") > 0)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    b_sig = minhash_signatures_df(
-        b_base.select("__id", "__h"),
-        hash_col="__h",
+    hashed = src.select("__id", shingle_hashes(sh, seed=seed, mask32=False).alias("__h"))
+    # the verify codes ride through the signature stage as a passthrough
+    # key, so one frame carries codes, signature and band keys
+    signed = minhash_signatures_df(
+        hashed.withColumn("__hk", F.col("__h")),
+        hash_col="__hk",
         sig_col="__sig",
         num_hashes=num_hashes,
         seed=seed,
     )
-    b_bands = _band_rows(b_sig, bands=bands, rows=rows).withColumn(
-        "__bhb", F.pmod(F.xxhash64("__bh"), F.lit(hash_buckets))
+    routed = signed.select(
+        "__id",
+        "__h",
+        F.transform(
+            _band_structs(bands=bands, rows=rows),
+            lambda b: F.struct(
+                b["band"].alias("band"),
+                b["band_hash"].alias("band_hash"),
+                F.pmod(F.xxhash64(b["band_hash"]), F.lit(hash_buckets)).alias("bhb"),
+            ),
+        ).alias("__bands"),
     )
-    from spatially_databricks_etl_spark.operators.indexstore import (
-        anti_tombstones,
-        apply_allowed_ids,
+    # a document with no shingle has no signature and matches nothing
+    docs = [
+        r
+        for r in collect_probe_batch(routed, "minhash_search_index", max_queries)
+        if r["__h"]
+    ]
+    probe = probe_frame(spark, docs, routed.schema)
+    b_bands = probe.select(
+        F.col("__id").alias("batch_id"), F.explode("__bands").alias("__b")
+    ).select(
+        "batch_id",
+        F.col("__b.band").alias("__band"),
+        F.col("__b.band_hash").alias("__bh"),
+        F.col("__b.bhb").alias("__bhb"),
     )
-
-    # static partition filter: only the batch's band-hash directories
-    probed = sorted({r["__bhb"] for r in b_bands.select("__bhb").distinct().collect()})
+    b_sh = probe.select(F.col("__id").alias("batch_id"), F.col("__h").alias("__sh_b"))
     # allowed_ids (the family's filtered-search hook — see
     # indexstore.apply_allowed_ids) restricts which INDEXED documents
     # may match; batch docs and the Jaccard values are unaffected
     idx_bands = apply_allowed_ids(
         anti_tombstones(
-            spark.read.parquet(f"{path}/bands").filter(F.col("__bhb").isin(probed)),
+            read_probed_partitions(
+                spark,
+                f"{path}/bands",
+                "__bhb",
+                [b["bhb"] for r in docs for b in r["__bands"]],
+            ),
             path,
             "__id",
         ),
@@ -1220,34 +1254,24 @@ def minhash_search_index(
         "__id",
     )
     cand = (
-        idx_bands.join(
-            F.broadcast(
-                b_bands.select(
-                    F.col("__id").alias("batch_id"), "__band", "__bh", "__bhb"
-                )
-            ),
-            on=["__bhb", "__band", "__bh"],
-        )
+        idx_bands.join(F.broadcast(b_bands), on=["__bhb", "__band", "__bh"])
         .select(F.col("batch_id"), F.col("__id").alias("indexed_id"))
         .dropDuplicates(["batch_id", "indexed_id"])
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    pbs = sorted(
-        {
-            r["__pb"]
-            for r in cand.select(
-                F.pmod(F.xxhash64("indexed_id"), F.lit(hash_buckets)).alias("__pb")
-            )
-            .distinct()
-            .collect()
-        }
+    # the candidate side's shingle directories: a probe of the INDEX
+    # candidates (not of the batch), so it stays its own action
+    pbs = [
+        r["__pb"]
+        for r in cand.select(
+            F.pmod(F.xxhash64("indexed_id"), F.lit(hash_buckets)).alias("__pb")
+        )
+        .distinct()
+        .collect()
+    ]
+    shingles = read_probed_partitions(spark, f"{path}/shingles", "__pb", pbs).select(
+        F.col("__id").alias("indexed_id"), F.col("__h").alias("__sh_i")
     )
-    shingles = (
-        spark.read.parquet(f"{path}/shingles")
-        .filter(F.col("__pb").isin(pbs))
-        .select(F.col("__id").alias("indexed_id"), F.col("__h").alias("__sh_i"))
-    )
-    b_sh = b_base.select(F.col("__id").alias("batch_id"), F.col("__h").alias("__sh_b"))
     out = (
         cand.join(shingles, "indexed_id")
         .join(F.broadcast(b_sh), "batch_id")
@@ -1255,7 +1279,7 @@ def minhash_search_index(
         .filter(F.col("jaccard_sim") >= threshold)
         .select("batch_id", "indexed_id", "jaccard_sim")
     )
-    return register_persists(out, [b_base, cand])
+    return register_persists(out, [cand])
 
 
 def minhash_delete_index(
@@ -1328,31 +1352,39 @@ def _simhash_band_rows(
     (code, chunks, buckets): the same code always reproduces the same
     band rows, which is what lets the upsert locate old band
     partitions from the codes store alone."""
+    return coded.select(
+        "__id",
+        "__sh",
+        F.explode(_simhash_chunk_structs(chunks=chunks, hash_buckets=hash_buckets)).alias(
+            "__c"
+        ),
+    ).select(
+        "__id",
+        "__sh",
+        F.col("__c.chunk").alias("__chunk"),
+        F.col("__c.cv").alias("__cv"),
+        F.col("__c.cb").alias("__cb"),
+    )
+
+
+def _simhash_chunk_structs(*, chunks: int, hash_buckets: int) -> Column:
+    """``array<struct<chunk, cv, cb>>`` of the ``__sh`` column: the
+    ``chunks`` fingerprint chunks, their values, and the partition key
+    ``cb = pmod(xxhash64(chunk, value), hash_buckets)`` — the one
+    definition :func:`_simhash_band_rows` explodes and the persisted
+    search routes its batch with."""
     width = 64 // chunks
     mask = (1 << width) - 1
-    chunk_structs = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("chunk"),
-                F.shiftrightunsigned(F.col("__sh"), i * width)
-                .bitwiseAND(F.lit(mask))
-                .alias("cv"),
-            )
-            for i in range(chunks)
-        ]
-    )
-    return (
-        coded.select("__id", "__sh", F.explode(chunk_structs).alias("__c"))
-        .select(
-            "__id",
-            "__sh",
-            F.col("__c.chunk").alias("__chunk"),
-            F.col("__c.cv").alias("__cv"),
+
+    def chunk(i: int) -> Column:
+        cv = F.shiftrightunsigned(F.col("__sh"), i * width).bitwiseAND(F.lit(mask))
+        return F.struct(
+            F.lit(i).alias("chunk"),
+            cv.alias("cv"),
+            F.pmod(F.xxhash64(F.lit(i), cv), F.lit(hash_buckets)).alias("cb"),
         )
-        .withColumn(
-            "__cb", F.pmod(F.xxhash64("__chunk", "__cv"), F.lit(hash_buckets))
-        )
-    )
+
+    return F.array(*[chunk(i) for i in range(chunks)])
 
 
 def simhash_write_index(
@@ -1497,23 +1529,31 @@ def simhash_search_index(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     allowed_ids: DataFrame | None = None,
+    max_queries: int | None = ANN_MAX_QUERIES,
 ) -> DataFrame:
     """Find near-duplicates of a (small) ingest ``batch`` against a
     persisted SimHash index: (batch_id, indexed_id, hamming) for every
     indexed document within ``max_hamming`` bit flips — complete by
     the pigeonhole guarantee (requires ``max_hamming < chunks``).
 
-    Plan shape: the batch fingerprints once; its chunk rows BROADCAST
-    into a join against the band store restricted by a STATIC ``__cb``
-    partition filter (≤ batch × chunks directories of
-    ``hash_buckets``), the join is on the exact (chunk, value) pair,
+    Plan shape: the batch fingerprints and chunks once, inside the ONE
+    collect of the batch (:func:`indexstore.collect_probe_batch`; more
+    than ``max_queries`` documents raise, ``None`` opts out); its chunk
+    rows, built as one Arrow table, BROADCAST into a join against the
+    band store read from the batch's ``__cb`` directories only (STATIC
+    partition filter, ≤ batch × chunks directories of
+    ``hash_buckets``); the join is on the exact (chunk, value) pair,
     and the Hamming verify runs on the ``__sh`` columns both sides
     already carry — the corpus is never re-fingerprinted and never
-    scanned in full; no second store touches the search path. Same
-    read-vs-writer honesty note as :func:`minhash_search_index`."""
+    scanned in full; no second store touches the search path, and the
+    caller's batch is never read again. Same read-vs-writer honesty
+    note as :func:`minhash_search_index`."""
     from spatially_databricks_etl_spark.operators.indexstore import (
         anti_tombstones,
         apply_allowed_ids,
+        collect_probe_batch,
+        probe_frame,
+        read_probed_partitions,
     )
 
     spark = batch.sparkSession
@@ -1524,20 +1564,24 @@ def simhash_search_index(
             "for the pigeonhole completeness guarantee"
         )
     src = batch.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__text"))
-    coded = simhash_codes(src, seed=meta["seed"])
-    b_bands = _simhash_band_rows(
-        coded, chunks=meta["chunks"], hash_buckets=meta["hash_buckets"]
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    cbs = sorted({r["__cb"] for r in b_bands.select("__cb").distinct().collect()})
-    idx = spark.read.parquet(f"{path}/bands").filter(F.col("__cb").isin(cbs))
-    idx = anti_tombstones(idx, path, "__id")
-    idx = apply_allowed_ids(idx, allowed_ids, "__id")
-    left = b_bands.select(
+    routed = simhash_codes(src, seed=meta["seed"]).select(
+        "__id",
+        "__sh",
+        _simhash_chunk_structs(
+            chunks=meta["chunks"], hash_buckets=meta["hash_buckets"]
+        ).alias("__bands"),
+    )
+    docs = collect_probe_batch(routed, "simhash_search_index", max_queries)
+    left = probe_frame(spark, docs, routed.schema).select(
         F.col("__id").alias("batch_id"),
         F.col("__sh").alias("__sh_a"),
-        "__chunk",
-        "__cv",
+        F.explode("__bands").alias("__b"),
+    ).select("batch_id", "__sh_a", F.col("__b.chunk").alias("__chunk"), F.col("__b.cv").alias("__cv"))
+    idx = read_probed_partitions(
+        spark, f"{path}/bands", "__cb", [b["cb"] for r in docs for b in r["__bands"]]
     )
+    idx = anti_tombstones(idx, path, "__id")
+    idx = apply_allowed_ids(idx, allowed_ids, "__id")
     right = idx.select(
         F.col("__id").alias("indexed_id"),
         F.col("__sh").alias("__sh_b"),
@@ -1550,14 +1594,13 @@ def simhash_search_index(
         .select("batch_id", "indexed_id", "__sh_a", "__sh_b")
         .dropDuplicates(["batch_id", "indexed_id"])
     )
-    out = (
+    return (
         cand.withColumn(
             "hamming", F.bit_count(F.col("__sh_a").bitwiseXOR(F.col("__sh_b")))
         )
         .filter(F.col("hamming") <= max_hamming)
         .select("batch_id", "indexed_id", "hamming")
     )
-    return register_persists(out, [b_bands])
 
 
 def simhash_delete_index(

@@ -19,7 +19,9 @@ operators exist to avoid. The standard LSM answer, applied here:
   LEFT ANTI join against the tombstone set drops deleted entries.
   The tombstone frame is id-only (8–16 bytes/row); Spark broadcasts
   it while small, and at worst it is one more equi-join keyed on the
-  id the plan already carries.
+  id the plan already carries. Whether tombstones exist at all is a
+  driver-local filesystem check (:func:`has_data_files`), never a
+  failed ``spark.read``.
 - ``compact``: physically rewrites the index without the tombstoned
   rows and clears the tombstone directory — the LSM major compaction.
   Search results are identical before and after (pinned by test);
@@ -37,6 +39,28 @@ generation they saw, and the anti-join kills only ``gen <= tgen`` —
 see ``operators/retrieval.py`` (``_write_tombstones_gen`` /
 ``_anti_tombstones_gen``). Both give upsert ≡ rebuild, pinned by test
 per family.
+
+Search plan shape, shared by all six searches (MinHash, SimHash,
+LSH, IVF, IVF-PQ, BM25) — partition-level pruning followed by
+in-partition verification, with every step before the pruning fused
+into one:
+
+1. ONE collect of the caller's batch (:func:`collect_probe_batch`):
+   ``limit(max_queries + 1)``, the probe keys computed inside that
+   collect by the family's own Spark expressions (routing stays
+   bit-identical to the in-memory operators), overflow raises.
+2. The probe/broadcast side is built from those rows with one
+   ``createDataFrame(pyarrow.Table)`` (:func:`probe_frame`) — the
+   caller's frame is never read again.
+3. Only the probed partition directories that exist are read, under
+   ``basePath`` and a static ``isin`` filter
+   (:func:`read_probed_partitions`): the plan keeps its
+   ``PartitionFilters`` and the index root is never listed.
+4. The tombstone anti-join, the candidate join and the exact scoring.
+
+Sidecars, probed directories and optional stores are located through
+the DRIVER's local filesystem, like every primitive here (SCALE.md,
+"Driver-local index metadata").
 
 The swap discipline matches ``bm25_append_index``'s df merge: stage
 the rewritten artifact next to the live one, then rename — never
@@ -263,7 +287,9 @@ def read_meta_sidecar(path: str, field: str) -> dict | list:
     indexes read unchanged. Local-FS like every other indexstore
     primitive; an object store would GET the object instead. Not a
     cache: every call re-reads the file, so a concurrent rewrite is
-    picked up exactly as the Spark-job read did."""
+    picked up exactly as the Spark-job read did. Lines and files that
+    are not JSON or carry no ``field`` are skipped; with no matching
+    row anywhere the read raises :class:`FileNotFoundError`."""
     import json
     import os
 
@@ -272,22 +298,42 @@ def read_meta_sidecar(path: str, field: str) -> dict | list:
             continue
         with open(os.path.join(path, name)) as fh:
             for line in fh:
-                line = line.strip()
-                if line:
-                    return json.loads(json.loads(line)[field])
+                try:
+                    row = json.loads(line)
+                except json.JSONDecodeError:
+                    continue
+                # a foreign or torn file (no ``field`` row) is skipped,
+                # never a KeyError: keep scanning the remaining files
+                if isinstance(row, dict) and field in row:
+                    return json.loads(row[field])
     raise FileNotFoundError(f"no sidecar row under {path}")
+
+
+def has_data_files(path: str) -> bool:
+    """Whether ``path`` is a directory holding at least one data file
+    (Spark's ``_SUCCESS`` and hidden ``.crc`` markers do not count) —
+    the driver-local existence test for an index's optional stores
+    (tombstones, the BM25 doc manifest). Asking ``spark.read`` instead
+    costs a failed analysis per call, and once the session holds an
+    ``Observation`` Spark re-analyses every failed read and logs it as
+    an ERROR ``PATH_NOT_FOUND`` stack trace."""
+    import os
+
+    try:
+        names = os.listdir(path)
+    except (FileNotFoundError, NotADirectoryError):
+        return False
+    return any(not n.startswith(("_", ".")) for n in names)
 
 
 def read_tombstones(spark: SparkSession, path: str) -> DataFrame | None:
     """The tombstone id set for an index, or ``None`` when no delete
     has ever happened (the common case — searches skip the anti-join
     entirely instead of scheduling a join against an empty frame)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(f"{path}/{TOMBSTONE_DIR}").select("id").distinct()
-    except AnalysisException:
+    tomb = f"{path}/{TOMBSTONE_DIR}"
+    if not has_data_files(tomb):
         return None
+    return spark.read.parquet(tomb).select("id").distinct()
 
 
 def anti_tombstones(df: DataFrame, path: str, id_col: str) -> DataFrame:
@@ -472,3 +518,128 @@ def apply_allowed_ids(
     return df.join(
         F.broadcast(ids), df[id_col] == ids["__allow_id"], "left_semi"
     )
+
+
+def batch_ceiling_error(op: str, max_queries: int) -> ValueError:
+    """The error every broadcast-sized query-batch contract raises on
+    overflow (``similarity.check_query_batch`` and
+    :func:`collect_probe_batch` share it)."""
+    return ValueError(
+        f"{op}: query batch exceeds {max_queries} rows — the batch is "
+        "collected/broadcast by contract. Split the queries into "
+        "batches, raise max_queries explicitly, or use a persisted "
+        "index path (lsh_search_index / ivf_search_index / "
+        "ivfpq_search_index) with batched query sets."
+    )
+
+
+def collect_probe_batch(
+    frame: DataFrame, op: str, max_queries: int | None
+) -> list[dict]:
+    """The ONE eager action a persisted-index search runs over its
+    caller's batch: ``frame`` is the batch with its probe keys already
+    derived by the family's own Spark expressions (IVF cells, LSH
+    buckets, band hashes, BM25 tokens), so routing is bit-identical to
+    the in-memory operators. ``limit(max_queries + 1)`` bounds what
+    reaches the driver, and more than ``max_queries`` rows raises
+    :func:`batch_ceiling_error` — the ``check_query_batch`` contract
+    without its separate count job. ``max_queries=None`` opts out of
+    the ceiling (the batch is still collected). The rows feed both the
+    static partition filter and :func:`probe_frame`, so the caller's
+    frame is never read again.
+
+    Returns the rows as ``dict`` records (structs as nested dicts).
+    Collected through Arrow: over a multi-partition batch that is one
+    job (per-partition limits, then one single-partition stage), where
+    a row ``collect`` of a limit scans partitions in growing rounds,
+    one job each."""
+    q = frame if max_queries is None else frame.limit(max_queries + 1)
+    rows = q.toArrow().to_pylist()
+    if max_queries is not None and len(rows) > max_queries:
+        raise batch_ceiling_error(op, max_queries)
+    return rows
+
+
+def probe_frame(spark: SparkSession, records: list[dict], schema) -> DataFrame:
+    """The probe/broadcast side of a search, built from collected rows
+    (``dict`` records matching ``schema``) with ONE
+    ``createDataFrame(pyarrow.Table)`` — O(1) JVM calls per batch,
+    where a plan of literal rows costs O(rows) — and typed exactly as
+    ``schema``, so joins and scores see the values the batch frame
+    carried."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(records, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema=schema)
+
+
+def read_probed_partitions(
+    spark: SparkSession, root: str, partition_col: str, values
+) -> DataFrame:
+    """Read the ``partition_col=value`` directories of a
+    ``partitionBy`` index root for the probed ``values`` only. The
+    directories that exist (a driver-local check, like every other
+    indexstore primitive) are read as explicit paths under
+    ``basePath`` — Spark lists just those, never the whole root — and
+    the static ``isin`` filter stays on the scan, so the plan still
+    carries ``PartitionFilters`` on ``partition_col``. A probe whose
+    directory is missing (an empty cell or bucket) contributes no
+    rows. When none of them exists, one existing directory is read
+    under the same filter — no row passes it, and the frame keeps the
+    index's schema; only an index with no partition directory at all
+    falls back to reading the root."""
+    import os
+
+    root = root.rstrip("/")
+    vals = sorted(set(values))
+    present = [
+        f"{root}/{partition_col}={v}"
+        for v in vals
+        if os.path.isdir(f"{root}/{partition_col}={v}")
+    ]
+    if not present:
+        present = [
+            f"{root}/{name}"
+            for name in sorted(os.listdir(root))
+            if name.startswith(f"{partition_col}=")
+        ][:1]
+    if present:
+        df = _footer_schema_reader(spark, present).option("basePath", root).parquet(*present)
+    else:
+        df = spark.read.parquet(root)
+    return df.filter(F.col(partition_col).isin(vals))
+
+
+def read_index_store(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` for an unpartitioned index store
+    (BM25 postings and df), minus the schema-inference job: see
+    :func:`_footer_schema_reader`."""
+    return _footer_schema_reader(spark, [path]).parquet(path)
+
+
+def _footer_schema_reader(spark: SparkSession, dirs: list):
+    """A parquet reader carrying the Spark schema stored in the footer
+    of the first data file under ``dirs`` (read driver-side). Without
+    a schema, ``spark.read.parquet`` runs a Spark job to read that
+    same footer: Spark stores the schema it wrote under every file's
+    ``org.apache.spark.sql.parquet.row.metadata`` key, and its schema
+    inference returns exactly that value, so the result is the same.
+    A file without the key (not written by Spark) leaves the inference
+    to Spark."""
+    import json
+    import os
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    for d in dirs:
+        for name in sorted(os.listdir(d)):
+            if name.startswith(("_", ".")) or not os.path.isfile(os.path.join(d, name)):
+                continue
+            meta = pq.read_metadata(os.path.join(d, name)).metadata or {}
+            spark_schema = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+            if spark_schema is None:
+                return spark.read
+            return spark.read.schema(StructType.fromJson(json.loads(spark_schema)))
+    return spark.read

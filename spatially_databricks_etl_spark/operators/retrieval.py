@@ -815,14 +815,14 @@ def _read_tombstones_gen(spark, path: str) -> DataFrame | None:
     delete + append with no physical postings rewrite. Legacy id-only
     tombstone rows kill every generation (tgen = +inf sentinel),
     preserving the old semantics. One row per id (max tgen)."""
-    from pyspark.errors import AnalysisException
+    from spatially_databricks_etl_spark.operators.indexstore import (
+        TOMBSTONE_DIR,
+        has_data_files,
+    )
 
-    from spatially_databricks_etl_spark.operators.indexstore import TOMBSTONE_DIR
-
-    try:
-        t = spark.read.parquet(f"{path}/{TOMBSTONE_DIR}")
-    except AnalysisException:
+    if not has_data_files(f"{path}/{TOMBSTONE_DIR}"):
         return None
+    t = spark.read.parquet(f"{path}/{TOMBSTONE_DIR}")
     tg = (
         F.col("gen").cast("long")
         if "gen" in t.columns
@@ -880,12 +880,11 @@ def _manifest_rows(docs: DataFrame, id_col: str, text_col: str, gen: int) -> Dat
 def _read_manifest_live(spark, path: str) -> DataFrame | None:
     """The LIVE rows of the doc-id manifest (generation-dead rows
     masked), or ``None`` for a legacy index without one."""
-    from pyspark.errors import AnalysisException
+    from spatially_databricks_etl_spark.operators.indexstore import has_data_files
 
-    try:
-        m = spark.read.parquet(f"{path}/{MANIFEST_DIR}")
-    except AnalysisException:
+    if not has_data_files(f"{path}/{MANIFEST_DIR}"):
         return None
+    m = spark.read.parquet(f"{path}/{MANIFEST_DIR}")
     return _anti_tombstones_gen(m, path, "doc_id")
 
 
@@ -916,42 +915,50 @@ def bm25_search_index(
     postings and df scans (range-sorted layout → footer min/max file
     skipping), the scalar stats come from the sidecar, and scoring +
     ranking match :func:`bm25_topk` exactly over the same corpus
-    (pinned by test). The distinct-term collect is query-batch-sized,
-    and the batch size is ENFORCED, not just documented:
-    ``check_query_batch`` (default ceiling
-    ``similarity.ANN_MAX_QUERIES``) raises before the collect on a
-    degenerate mega-batch — the same contract as the LSH/IVF/IVF-PQ
-    index routers."""
+    (pinned by test). The batch is collected ONCE, already tokenized
+    by the shared tokenizer, and the batch size is ENFORCED there, not
+    just documented: :func:`indexstore.collect_probe_batch` (default
+    ceiling ``similarity.ANN_MAX_QUERIES``) raises on a degenerate
+    mega-batch — the same contract as the LSH/IVF/IVF-PQ index
+    routers. The distinct (query, term) probe side is built from those
+    rows as one Arrow table, so the caller's frame is read once."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
     from spatially_databricks_etl_spark.operators.indexstore import (
+        apply_allowed_ids,
+        collect_probe_batch,
+        probe_frame,
+        read_index_store,
         read_meta_sidecar,
     )
     from spatially_databricks_etl_spark.operators.relational import top_k_per_group
 
-    check_query_batch(queries, "bm25_search_index", max_queries)
     spark = queries.sparkSession
     meta = read_meta_sidecar(f"{path}/_bm25_meta", "bm25_meta_json")
-    qterms = (
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.explode(tokens_col(query_col)).alias("term"),
-        )
-        .distinct()
+    q = queries.select(
+        F.col(query_id_col).alias("query_id"), tokens_col(query_col).alias("__terms")
     )
-    from spatially_databricks_etl_spark.operators.indexstore import (
-        apply_allowed_ids,
+    rows = collect_probe_batch(q, "bm25_search_index", max_queries)
+    # set semantics per query (repeated terms count once), as in bm25_topk
+    pairs = dict.fromkeys(
+        (r["query_id"], t) for r in rows for t in (r["__terms"] or [])
     )
-
-    terms = sorted({r["term"] for r in qterms.select("term").distinct().collect()})
+    qterms = probe_frame(
+        spark,
+        [{"query_id": qid, "term": t} for qid, t in pairs],
+        StructType([q.schema["query_id"], StructField("term", StringType())]),
+    )
+    terms = sorted({t for _, t in pairs})
     post = apply_allowed_ids(
         _anti_tombstones_gen(
-            spark.read.parquet(f"{path}/postings").filter(F.col("term").isin(terms)),
+            read_index_store(spark, f"{path}/postings").filter(F.col("term").isin(terms)),
             path,
             "doc_id",
         ),
         allowed_ids,
         "doc_id",
     )
-    df_t = spark.read.parquet(f"{path}/df").filter(F.col("term").isin(terms))
+    df_t = read_index_store(spark, f"{path}/df").filter(F.col("term").isin(terms))
     matched = post.join(F.broadcast(qterms), "term").join(F.broadcast(df_t), "term")
     n_docs, avgdl = float(meta["n_docs"]), float(meta["avgdl"])
     idf = F.log(1.0 + (F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5))

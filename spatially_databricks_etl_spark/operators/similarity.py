@@ -20,6 +20,8 @@ zip_with/aggregate (functions/vectors.py) — no UDF in any hot path.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -28,9 +30,13 @@ from spatially_databricks_etl_spark.functions.vectors import cosine_similarity, 
 from spatially_databricks_etl_spark.operators.indexstore import (
     anti_tombstones,
     apply_allowed_ids,
+    batch_ceiling_error,
     clear_tombstones,
+    collect_probe_batch,
     compact_partitioned_index,
+    probe_frame,
     read_meta_sidecar,
+    read_probed_partitions,
     write_meta_sidecar,
     write_tombstones,
 )
@@ -62,13 +68,7 @@ def check_query_batch(
         return
     n = queries.limit(max_queries + 1).count()
     if n > max_queries:
-        raise ValueError(
-            f"{op}: query batch exceeds {max_queries} rows — the batch is "
-            "collected/broadcast by contract. Split the queries into "
-            "batches, raise max_queries explicitly, or use a persisted "
-            "index path (lsh_search_index / ivf_search_index / "
-            "ivfpq_search_index) with batched query sets."
-        )
+        raise batch_ceiling_error(op, max_queries)
 
 
 def brute_force_topk(
@@ -116,9 +116,7 @@ def _hyperplanes(dim: int, planes: int, seed: int) -> np.ndarray:
 
 def _lsh_dots(vec_col: Column | str, planes: np.ndarray) -> list[Column]:
     v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    return [
-        dot(v, F.array(*[F.lit(float(x)) for x in plane])) for plane in planes
-    ]
+    return [dot(v, F.expr(_double_array_sql(plane))) for plane in planes]
 
 
 def _bucket_from_dots(dots: list[Column]) -> Column:
@@ -320,30 +318,34 @@ def lsh_search_index(
     max_queries: int | None = ANN_MAX_QUERIES,
 ) -> DataFrame:
     """Search a persisted LSH index (see :func:`lsh_write_index`):
-    queries bucket with the sidecar's hyperplanes, the distinct query
-    buckets become a STATIC partition filter (only probed directories
-    are listed/read), and scoring broadcast-joins the query batch on
-    the partition column. Identical results to
+    queries bucket with the sidecar's hyperplanes inside the one batch
+    collect (:func:`indexstore.collect_probe_batch`, which also
+    enforces ``max_queries``), the query buckets' directories are read
+    under a STATIC partition filter (only probed directories are
+    listed/read), and scoring broadcast-joins the Arrow-built probe
+    side on the partition column. Identical results to
     :func:`lsh_bucketed_topk` over the same corpus and parameters
     (pinned by test)."""
-    check_query_batch(queries, "lsh_search_index", max_queries)
     spark = queries.sparkSession
     meta = read_meta_sidecar(f"{path}/_lsh_meta", "lsh_params_json")
     hp = _hyperplanes(meta["dim"], meta["planes"], meta["seed"])
     q = queries.select(
         F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
     ).withColumn("__bucket", lsh_bucket("__qvec", hp))
-    buckets = sorted({r["__bucket"] for r in q.select("__bucket").distinct().collect()})
+    rows = collect_probe_batch(q, "lsh_search_index", max_queries)
+    probes = probe_frame(spark, rows, q.schema)
     corpus = apply_allowed_ids(
         anti_tombstones(
-            spark.read.parquet(path).filter(F.col("__bucket").isin(buckets)),
+            read_probed_partitions(
+                spark, path, "__bucket", [r["__bucket"] for r in rows]
+            ),
             path,
             "vec_id",
         ),
         allowed_ids,
         "vec_id",
     )
-    scored = corpus.join(F.broadcast(q), on="__bucket").withColumn(
+    scored = corpus.join(F.broadcast(probes), on="__bucket").withColumn(
         "cosine_sim", cosine_similarity(F.col("__qvec"), F.col("embedding"))
     )
     out = top_k_per_group(
@@ -390,9 +392,28 @@ def _scaled_centroid_lit(raw_cents: list[list[float]]) -> Column:
     n_centroids (vs n_centroids separate dot expressions — compile
     time grows with tree size, and the search path is re-planned per
     query batch)."""
-    inv = [1.0 / (float(np.linalg.norm(c)) or 1.0) for c in raw_cents]
-    return F.array(
-        *[F.array(*[F.lit(x * inv[j]) for x in c]) for j, c in enumerate(raw_cents)]
+    scaled = [
+        # c·(1/|c|): per element the same IEEE product as x·inv
+        np.asarray(c, dtype=np.float64) * (1.0 / (float(np.linalg.norm(c)) or 1.0))
+        for c in raw_cents
+    ]
+    return F.expr("array(" + ", ".join(_double_array_sql(v) for v in scaled) + ")")
+
+
+def _double_array_sql(values) -> str:
+    """``array<double>`` literal as SQL text. A whole matrix of these
+    parses in ONE JVM call, where ``F.lit`` per element — and
+    ``F.lit(np.ndarray)``, whose Py4J converter sets the Java array one
+    element at a time — costs a round trip per value (about 1,000 for
+    16 centroids of dimension 64). ``repr`` round-trips every float64
+    exactly, so the literal is bit-identical to the per-element form."""
+    return (
+        "array("
+        + ", ".join(
+            f"{x!r}D" if math.isfinite(x) else f"CAST('{x!r}' AS DOUBLE)"
+            for x in (float(v) for v in values)
+        )
+        + ")"
     )
 
 
@@ -540,14 +561,16 @@ def _probe_cells(
     """(query_id, __qvec, __cell) — one row per probed cell, the
     ``nprobe`` nearest centroids per query."""
     q = queries.select(F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qvec"))
-    return q.withColumn(
-        "__cell",
-        F.explode(
-            F.transform(
-                F.slice(F.reverse(F.array_sort(cell_sims(F.col("__qvec")))), 1, nprobe),
-                lambda s: s.getField("cell"),
-            )
-        ),
+    return q.withColumn("__cell", F.explode(_nearest_cells(cell_sims, nprobe)))
+
+
+def _nearest_cells(cell_sims, nprobe: int) -> Column:
+    """The ``nprobe`` nearest cells of ``__qvec`` as an array, nearest
+    first — the probe routing both the in-memory and the persisted
+    IVF search use."""
+    return F.transform(
+        F.slice(F.reverse(F.array_sort(cell_sims(F.col("__qvec")))), 1, nprobe),
+        lambda s: s.getField("cell"),
     )
 
 
@@ -650,24 +673,33 @@ def ivf_search_index(
 ) -> DataFrame:
     """Search a persisted IVF index (see :func:`ivf_write_index`).
 
-    The probed cell set is computed from the (small) query batch and
-    applied as a STATIC partition filter on the index scan — the plan
-    shows non-empty ``PartitionFilters`` and only the probed
-    directories are read. Per-query routing then broadcast-joins the
-    probe rows on the partition column. Result is identical to
-    :func:`ivf_topk` over the same corpus and centroids (pinned by
-    test). The collect is O(queries·nprobe) — the query batch is
-    broadcast anyway, so driver-side cell routing adds no new scale
-    constraint."""
-    check_query_batch(queries, "ivf_search_index", max_queries)
+    The batch is collected ONCE with each query's ``nprobe`` nearest
+    cells already routed by the same Spark expression
+    :func:`ivf_topk` uses (:func:`indexstore.collect_probe_batch`,
+    which also enforces ``max_queries``). The probed cell set is
+    applied as a STATIC partition filter over just the probed
+    directories — the plan shows non-empty ``PartitionFilters`` and
+    no other directory is listed or read — and the (query, cell)
+    probe rows, built as one Arrow table, broadcast-join on the
+    partition column. Result is identical to :func:`ivf_topk` over
+    the same corpus and centroids (pinned by test). The collect is
+    O(queries) — the query batch is broadcast anyway, so driver-side
+    cell routing adds no new scale constraint."""
     spark = queries.sparkSession
     cents = centroids if centroids is not None else ivf_read_centroids(spark, path)
     cell_sims = _cell_sims(_scaled_centroid_lit(cents))
-    probes = _probe_cells(queries, cell_sims, nprobe, query_id_col, vec_col)
-    cells = sorted({r["__cell"] for r in probes.select("__cell").distinct().collect()})
+    routed = queries.select(
+        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
+    ).withColumn("__cells", _nearest_cells(cell_sims, nprobe))
+    rows = collect_probe_batch(routed, "ivf_search_index", max_queries)
+    probes = probe_frame(spark, rows, routed.schema).select(
+        "query_id", "__qvec", F.explode("__cells").alias("__cell")
+    )
     corpus = apply_allowed_ids(
         anti_tombstones(
-            spark.read.parquet(path).filter(F.col("__cell").isin(cells)),
+            read_probed_partitions(
+                spark, path, "__cell", [c for r in rows for c in r["__cells"]]
+            ),
             path,
             "vec_id",
         ),
@@ -985,20 +1017,22 @@ def ivfpq_search_index(
 
     if shortlist is None:
         shortlist = 4 * k
-    check_query_batch(queries, "ivfpq_search_index", max_queries)
     spark = queries.sparkSession
     meta = read_meta_sidecar(f"{path}/_ivfpq_meta", "ivfpq_json")
     cents, codebooks = meta["centroids"], meta["codebooks"]
     cb = np.asarray(codebooks, dtype=np.float64)
     m, _, subdim = cb.shape
 
-    qrows = queries.select(
-        F.col(query_id_col).alias("__qid"), F.col(vec_col).alias("__qv")
-    ).collect()
+    # the one batch collect (ceiling enforced there); the rerank's
+    # broadcast side is built from these rows, not the caller's frame
+    q = queries.select(
+        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
+    )
+    qrows = collect_probe_batch(q, "ivfpq_search_index", max_queries)
     if not qrows:
         raise ValueError("ivfpq_search_index: empty query set")
-    qids = np.asarray([r["__qid"] for r in qrows])
-    Q = np.stack([np.asarray(r["__qv"], dtype=np.float64) for r in qrows])
+    qids = np.asarray([r["query_id"] for r in qrows])
+    Q = np.stack([np.asarray(r["__qvec"], dtype=np.float64) for r in qrows])
     lut = np.stack(
         [
             (
@@ -1024,12 +1058,11 @@ def ivfpq_search_index(
         for i in range(len(qids))
     ]
     cells = sorted({c for cs in probe_sets for c in cs})
+    cell_rows = read_probed_partitions(spark, path, "__cell", cells)
 
     codes = apply_allowed_ids(
         anti_tombstones(
-            spark.read.parquet(path)
-            .filter(F.col("__cell").isin(cells))
-            .select("vec_id", "pq_code", "__cell"),
+            cell_rows.select("vec_id", "pq_code", "__cell"),
             path,
             "vec_id",
         ),
@@ -1076,7 +1109,7 @@ def ivfpq_search_index(
                 else pd.DataFrame({"query_id": [], "vec_id": [], "adc_dist": []})
             )
 
-    qid_t = queries.schema[query_id_col].dataType.simpleString()
+    qid_t = q.schema["query_id"].dataType.simpleString()
     # the corpus id type comes from the STORED index schema, not a
     # hardcoded long — string/int ids round-trip through the index
     vid_t = codes.schema["vec_id"].dataType.simpleString()
@@ -1090,20 +1123,11 @@ def ivfpq_search_index(
         shortlist,
         rank_col="__adc_rank",
     ).select("query_id", "vec_id")
-    vecs = (
-        spark.read.parquet(path)
-        .filter(F.col("__cell").isin(cells))
-        .select("vec_id", "embedding")
-    )
+    vecs = cell_rows.select("vec_id", "embedding")
     exact = (
         short.join(vecs, "vec_id")
         .join(
-            F.broadcast(
-                queries.select(
-                    F.col(query_id_col).alias("query_id"),
-                    F.col(vec_col).alias("__qvec"),
-                )
-            ),
+            F.broadcast(probe_frame(spark, qrows, q.schema)),
             "query_id",
         )
         .withColumn("cosine_sim", cosine_similarity(F.col("__qvec"), F.col("embedding")))
