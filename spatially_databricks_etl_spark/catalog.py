@@ -5760,9 +5760,7 @@ def q_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec = brute_force_topk(emb, qvecs, k=10, query_id_col="query_id").select(
         "query_id", F.col("neighbor_id").alias("doc_id"), "rank"
     )
-    # overlap=True: the two retrievers materialize concurrently
-    # (guide §2.6) — identical rows, wall ≈ max(retriever) + fusion
-    return rrf_fuse(lex, vec, k=60, topk=10, quantize=6, overlap=True)
+    return rrf_fuse(lex, vec, k=60, topk=10, quantize=6)
 
 
 SQL_HYBRID_TOPK = """
@@ -5856,17 +5854,7 @@ def q_hybrid3_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id", F.col("neighbor_id").alias("doc_id"), "rank"
     )
     tri = ngram_jaccard_topk(d, qdocs, n=3, k=10)
-    # overlap=True: the three retrievers materialize concurrently
-    # (guide §2.6) — identical rows, wall ≈ max(retriever) + fusion
-    # instead of their sum (the round-14 verdict's hybrid3 item)
-    return rrf_fuse(
-        [lex, vec, tri],
-        weights=[0.5, 0.3, 0.2],
-        k=60,
-        topk=10,
-        quantize=6,
-        overlap=True,
-    )
+    return rrf_fuse([lex, vec, tri], weights=[0.5, 0.3, 0.2], k=60, topk=10, quantize=6)
 
 
 SQL_HYBRID3_TOPK = """

@@ -25,6 +25,7 @@ from spatially_databricks_etl_spark.caching import register_persists
 from spatially_databricks_etl_spark.functions.text import ngrams, tokens
 from spatially_databricks_etl_spark.operators.relational import ensure_parallelism
 from spatially_databricks_etl_spark.operators.similarity import ANN_MAX_QUERIES
+from spatially_databricks_etl_spark.sources.files import scan_parquet
 
 
 def exact_dedup(df: DataFrame, subset: list[str], *, keep_by: str | None = None) -> DataFrame:
@@ -525,12 +526,12 @@ def minhash_pairs_from_index(
     ``id_a < id_b``, with the same ``lsh_observation`` cap-visibility
     contract.
     """
-    banded = spark.read.parquet(f"{path}/bands").select("__id", "__band", "__bh")
+    banded = scan_parquet(spark, f"{path}/bands").select("__id", "__band", "__bh")
     # persist the shingle store scan: both verify sides consume it, and
     # one cached columnar read beats two passes over the 64-way
     # partitioned directory tree (release via release_intermediates)
     shingles = (
-        spark.read.parquet(f"{path}/shingles")
+        scan_parquet(spark, f"{path}/shingles")
         .select("__id", "__h")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -1080,7 +1081,7 @@ def minhash_upsert_index(
         }
     )
     old_sh = (
-        spark.read.parquet(f"{path}/shingles")
+        scan_parquet(spark, f"{path}/shingles")
         .filter(F.col("__pb").isin(pbs))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -1110,7 +1111,7 @@ def minhash_upsert_index(
     # one store but not the other (its band rows can live in
     # partitions this upsert never touches) would make the id's old
     # content unreconstructable and a later upsert/shed of it unsafe.
-    keep_b = spark.read.parquet(f"{path}/bands").filter(
+    keep_b = scan_parquet(spark, f"{path}/bands").filter(
         F.col("__bhb").isin(bhbs)
     ).join(F.broadcast(batch_ids), "__id", "left_anti")
     content_b = keep_b.select("__id", "__band", "__bh", "__bhb").unionByName(
@@ -1330,7 +1331,7 @@ def minhash_compact_index(spark, path: str) -> None:
     commit_index_mutation(path, ver)  # arbitrate vs concurrent mutators
     for sub, pcol in (("bands", "__bhb"), ("shingles", "__pb")):
         live = anti_tombstones(
-            spark.read.parquet(f"{path}/{sub}"), path, "__id"
+            scan_parquet(spark, f"{path}/{sub}"), path, "__id"
         )
         staged = f"{path}/{sub}_staged"
         shutil.rmtree(staged, ignore_errors=True)
@@ -1645,7 +1646,7 @@ def simhash_compact_index(spark, path: str) -> None:
     ver = begin_index_mutation(path)
     commit_index_mutation(path, ver)  # arbitrate vs concurrent mutators
     for sub, pcol in (("bands", "__cb"), ("codes", "__pb")):
-        live = anti_tombstones(spark.read.parquet(f"{path}/{sub}"), path, "__id")
+        live = anti_tombstones(scan_parquet(spark, f"{path}/{sub}"), path, "__id")
         staged = f"{path}/{sub}_staged"
         shutil.rmtree(staged, ignore_errors=True)
         live.repartition(pcol).write.mode("overwrite").partitionBy(pcol).parquet(
@@ -1713,7 +1714,7 @@ def simhash_upsert_index(
         }
     )
     old_codes = (
-        spark.read.parquet(f"{path}/codes")
+        scan_parquet(spark, f"{path}/codes")
         .filter(F.col("__pb").isin(pbs))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -1730,7 +1731,7 @@ def simhash_upsert_index(
     new_cbs = {r["__cb"] for r in new_bands.select("__cb").distinct().collect()}
     cbs = sorted(old_cbs | new_cbs)
 
-    keep_b = spark.read.parquet(f"{path}/bands").filter(
+    keep_b = scan_parquet(spark, f"{path}/bands").filter(
         F.col("__cb").isin(cbs)
     ).join(F.broadcast(batch_ids), "__id", "left_anti")
     content_b = keep_b.select("__id", "__sh", "__chunk", "__cv", "__cb").unionByName(

@@ -20,6 +20,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from spatially_databricks_etl_spark.functions.vectors import dot
+from spatially_databricks_etl_spark.operators.similarity import (
+    _double_array_sql,
+    _double_matrix_lit,
+)
 
 
 def pca_fit(
@@ -102,8 +106,8 @@ def pca_project_col(vec: Column, model: dict) -> Column:
     (x·c_j − mean·c_j), so the vector is read once per component."""
     comps = model["components"]
     offsets = [float(np.dot(model["mean"], c)) for c in comps]
-    comp_lit = F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in comps])
-    off_lit = F.array(*[F.lit(o) for o in offsets])
+    comp_lit = _double_matrix_lit(comps)
+    off_lit = F.expr(_double_array_sql(offsets))
     return F.transform(
         comp_lit, lambda c, j: dot(vec, c) - F.get(off_lit, j)
     )
@@ -473,9 +477,7 @@ def kmeans_assign(
     distances."""
     if not centroids:
         raise ValueError("kmeans_assign: empty centroid list")
-    cents_lit = F.array(
-        *[F.array(*[F.lit(float(x)) for x in c]) for c in centroids]
-    )
+    cents_lit = _double_matrix_lit(centroids)
     structs = F.transform(
         cents_lit,
         lambda c, j: F.struct(

@@ -60,7 +60,11 @@ into one:
 
 Sidecars, probed directories and optional stores are located through
 the DRIVER's local filesystem, like every primitive here (SCALE.md,
-"Driver-local index metadata").
+"Driver-local index metadata"). Index and tombstone reads go through
+the same schema-resolved reader as table scans
+(:func:`sources.files.scan_parquet`): the schema Spark wrote into a
+data file's footer is read driver-side and kept for the session, so
+no read runs a schema-inference job.
 
 The swap discipline matches ``bm25_append_index``'s df merge: stage
 the rewritten artifact next to the live one, then rename — never
@@ -85,6 +89,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from spatially_databricks_etl_spark.sources.files import scan_parquet
 
 #: Subdirectory (underscore-prefixed → invisible to partition
 #: discovery) holding tombstoned ids as parquet, one column ``id``.
@@ -333,7 +339,7 @@ def read_tombstones(spark: SparkSession, path: str) -> DataFrame | None:
     tomb = f"{path}/{TOMBSTONE_DIR}"
     if not has_data_files(tomb):
         return None
-    return spark.read.parquet(tomb).select("id").distinct()
+    return scan_parquet(spark, tomb).select("id").distinct()
 
 
 def anti_tombstones(df: DataFrame, path: str, id_col: str) -> DataFrame:
@@ -462,7 +468,7 @@ def compact_partitioned_index(
     import shutil
 
     ver = begin_index_mutation(path)
-    live = anti_tombstones(spark.read.parquet(path), path, id_col)
+    live = anti_tombstones(scan_parquet(spark, path), path, id_col)
     staged = f"{path.rstrip('/')}.__compact_staged"
     shutil.rmtree(staged, ignore_errors=True)
     # guide §6: cluster rows by their target directory before the
@@ -588,7 +594,10 @@ def read_probed_partitions(
     rows. When none of them exists, one existing directory is read
     under the same filter — no row passes it, and the frame keeps the
     index's schema; only an index with no partition directory at all
-    falls back to reading the root."""
+    falls back to reading the root. Every read goes through
+    :func:`sources.files.scan_parquet`, so its schema comes from the
+    session's cache or the footer Spark wrote, never an inference
+    job."""
     import os
 
     root = root.rstrip("/")
@@ -605,41 +614,7 @@ def read_probed_partitions(
             if name.startswith(f"{partition_col}=")
         ][:1]
     if present:
-        df = _footer_schema_reader(spark, present).option("basePath", root).parquet(*present)
+        df = scan_parquet(spark, *present, base_path=root)
     else:
-        df = spark.read.parquet(root)
+        df = scan_parquet(spark, root)
     return df.filter(F.col(partition_col).isin(vals))
-
-
-def read_index_store(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` for an unpartitioned index store
-    (BM25 postings and df), minus the schema-inference job: see
-    :func:`_footer_schema_reader`."""
-    return _footer_schema_reader(spark, [path]).parquet(path)
-
-
-def _footer_schema_reader(spark: SparkSession, dirs: list):
-    """A parquet reader carrying the Spark schema stored in the footer
-    of the first data file under ``dirs`` (read driver-side). Without
-    a schema, ``spark.read.parquet`` runs a Spark job to read that
-    same footer: Spark stores the schema it wrote under every file's
-    ``org.apache.spark.sql.parquet.row.metadata`` key, and its schema
-    inference returns exactly that value, so the result is the same.
-    A file without the key (not written by Spark) leaves the inference
-    to Spark."""
-    import json
-    import os
-
-    import pyarrow.parquet as pq
-    from pyspark.sql.types import StructType
-
-    for d in dirs:
-        for name in sorted(os.listdir(d)):
-            if name.startswith(("_", ".")) or not os.path.isfile(os.path.join(d, name)):
-                continue
-            meta = pq.read_metadata(os.path.join(d, name)).metadata or {}
-            spark_schema = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
-            if spark_schema is None:
-                return spark.read
-            return spark.read.schema(StructType.fromJson(json.loads(spark_schema)))
-    return spark.read

@@ -33,6 +33,7 @@ from spatially_databricks_etl_spark.operators.similarity import (
     ANN_MAX_QUERIES,
     check_query_batch,
 )
+from spatially_databricks_etl_spark.sources.files import scan_parquet
 
 #: Tokenizer contract shared with the SQL oracle: lowercase, split on
 #: runs of non-[a-z0-9], drop empties. Deliberately engine-portable.
@@ -175,7 +176,6 @@ def rrf_fuse(
     id_col: str = "doc_id",
     rank_col: str = "rank",
     quantize: int | None = 6,
-    overlap: bool = False,
 ) -> DataFrame:
     """Weighted reciprocal-rank fusion (Cormack, Clarke & Buettcher,
     SIGIR 2009) of N ranked retrieval lists — the standard
@@ -203,16 +203,10 @@ def rrf_fuse(
     (total score 0 = "not retrieved") is dropped before ranking, which
     makes a zero weight EXACTLY equivalent to omitting its list.
 
-    ``overlap=True`` materializes the input lists CONCURRENTLY before
-    fusing (guide §2.6 "overlap independent jobs"): each retriever is
-    persisted and counted from its own driver thread, so the next
-    retriever's tasks back-fill executors freed by the current one's
-    straggler tail — wall clock ≈ max(retriever) + fusion instead of
-    Σ retrievers. Results are bit-identical (persist changes nothing);
-    the persisted lists are registered on the result for
-    ``caching.release_intermediates``. Leave False for already-
-    materialized or trivially-small inputs, where the extra count
-    jobs cost more than the overlap saves.
+    The fusion is lazy and persists nothing: materializing the input
+    lists concurrently first (persist + count per list from a driver
+    thread pool) measured slower than the plain plan on both catalog
+    hybrid rows (CHANGES.md).
 
     Returns (query_id, doc_id, score, rank) with rank ≤ ``topk``.
     """
@@ -233,25 +227,6 @@ def rrf_fuse(
         )
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    persisted: list[DataFrame] = []
-    if overlap and len(frames) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target
-        from pyspark.storagelevel import StorageLevel
-
-        persisted = [f.persist(StorageLevel.MEMORY_AND_DISK) for f in frames]
-        # 2-3 jobs in flight is plenty (guide §2.6); FIFO scheduling
-        # back-fills the earlier job's straggler tail with the next
-        # job's tasks. inheritable_thread_target propagates the JVM
-        # thread-locals (job group/description) into the pool threads.
-        with ThreadPoolExecutor(max_workers=min(3, len(persisted))) as pool:
-            list(
-                pool.map(
-                    inheritable_thread_target(lambda f: f.count()), persisted
-                )
-            )
-        frames = persisted
     ranked = [
         f.select(
             F.col(query_id_col).alias("query_id"),
@@ -285,12 +260,7 @@ def rrf_fuse(
         topk,
         rank_col="rank",
     )
-    out = out.select("query_id", "doc_id", "score", "rank")
-    if persisted:
-        from spatially_databricks_etl_spark.caching import register_persists
-
-        out = register_persists(out, persisted)
-    return out
+    return out.select("query_id", "doc_id", "score", "rank")
 
 
 def ngram_jaccard_topk(
@@ -417,7 +387,7 @@ def bm25_write_index(
         .parquet(f"{path}/postings")
     )
     spark = docs.sparkSession
-    post_idx = spark.read.parquet(f"{path}/postings")
+    post_idx = scan_parquet(spark, f"{path}/postings")
     (
         post_idx.groupBy("term")
         .agg(F.count(F.lit(1)).cast("double").alias("df"))
@@ -433,7 +403,7 @@ def bm25_write_index(
     # the old per-doc tokenize pass produced (dl coalesces null-text
     # to 0; the double sum of integers < 2^53 is exact), one
     # tokenization pass saved
-    row = spark.read.parquet(f"{path}/{MANIFEST_DIR}").agg(
+    row = scan_parquet(spark, f"{path}/{MANIFEST_DIR}").agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
         F.sum(F.col("dl").cast("double")).alias("sum_dl"),
     ).first()
@@ -534,7 +504,7 @@ def bm25_append_index(
         .groupBy("term")
         .agg(F.count(F.lit(1)).cast("double").alias("df"))
     )
-    old_df = spark.read.parquet(f"{path}/df")
+    old_df = scan_parquet(spark, f"{path}/df")
     merged = (
         old_df.unionByName(batch_df)
         .groupBy("term")
@@ -634,7 +604,7 @@ def bm25_delete_index(
         # index for exact accounting of those)
         live = (
             _anti_tombstones_gen(
-                spark.read.parquet(f"{path}/postings"), path, "doc_id"
+                scan_parquet(spark, f"{path}/postings"), path, "doc_id"
             )
             .join(F.broadcast(dele), "doc_id")
             .select("doc_id", "dl")
@@ -648,7 +618,7 @@ def bm25_delete_index(
 
     gone = (
         _anti_tombstones_gen(
-            spark.read.parquet(f"{path}/postings"), path, "doc_id"
+            scan_parquet(spark, f"{path}/postings"), path, "doc_id"
         )
         .join(F.broadcast(live.select("doc_id")), "doc_id")
         .persist()
@@ -658,7 +628,7 @@ def bm25_delete_index(
     )
     sum_gone = float(live.agg(F.sum("dl")).first()[0] or 0.0)
 
-    old_df = spark.read.parquet(f"{path}/df")
+    old_df = scan_parquet(spark, f"{path}/df")
     merged = (
         old_df.join(F.broadcast(delta), "term", "left")
         .select(
@@ -719,7 +689,7 @@ def bm25_compact_index(spark, path: str) -> None:
 
     ver = begin_index_mutation(path)
     post = _anti_tombstones_gen(
-        spark.read.parquet(f"{path}/postings"), path, "doc_id"
+        scan_parquet(spark, f"{path}/postings"), path, "doc_id"
     )
     staged = f"{path}/postings_staged"
     (
@@ -822,7 +792,7 @@ def _read_tombstones_gen(spark, path: str) -> DataFrame | None:
 
     if not has_data_files(f"{path}/{TOMBSTONE_DIR}"):
         return None
-    t = spark.read.parquet(f"{path}/{TOMBSTONE_DIR}")
+    t = scan_parquet(spark, f"{path}/{TOMBSTONE_DIR}")
     tg = (
         F.col("gen").cast("long")
         if "gen" in t.columns
@@ -884,7 +854,7 @@ def _read_manifest_live(spark, path: str) -> DataFrame | None:
 
     if not has_data_files(f"{path}/{MANIFEST_DIR}"):
         return None
-    m = spark.read.parquet(f"{path}/{MANIFEST_DIR}")
+    m = scan_parquet(spark, f"{path}/{MANIFEST_DIR}")
     return _anti_tombstones_gen(m, path, "doc_id")
 
 
@@ -928,7 +898,6 @@ def bm25_search_index(
         apply_allowed_ids,
         collect_probe_batch,
         probe_frame,
-        read_index_store,
         read_meta_sidecar,
     )
     from spatially_databricks_etl_spark.operators.relational import top_k_per_group
@@ -951,14 +920,14 @@ def bm25_search_index(
     terms = sorted({t for _, t in pairs})
     post = apply_allowed_ids(
         _anti_tombstones_gen(
-            read_index_store(spark, f"{path}/postings").filter(F.col("term").isin(terms)),
+            scan_parquet(spark, f"{path}/postings").filter(F.col("term").isin(terms)),
             path,
             "doc_id",
         ),
         allowed_ids,
         "doc_id",
     )
-    df_t = read_index_store(spark, f"{path}/df").filter(F.col("term").isin(terms))
+    df_t = scan_parquet(spark, f"{path}/df").filter(F.col("term").isin(terms))
     matched = post.join(F.broadcast(qterms), "term").join(F.broadcast(df_t), "term")
     n_docs, avgdl = float(meta["n_docs"]), float(meta["avgdl"])
     idf = F.log(1.0 + (F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5))

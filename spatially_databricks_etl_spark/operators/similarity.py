@@ -44,6 +44,7 @@ from spatially_databricks_etl_spark.operators.relational import (
     ensure_parallelism,
     top_k_per_group,
 )
+from spatially_databricks_etl_spark.sources.files import scan_parquet
 
 #: Default ceiling for the broadcast-sized query-batch contract every
 #: ANN entry point shares. Above this, the collected/broadcast query
@@ -397,7 +398,13 @@ def _scaled_centroid_lit(raw_cents: list[list[float]]) -> Column:
         np.asarray(c, dtype=np.float64) * (1.0 / (float(np.linalg.norm(c)) or 1.0))
         for c in raw_cents
     ]
-    return F.expr("array(" + ", ".join(_double_array_sql(v) for v in scaled) + ")")
+    return _double_matrix_lit(scaled)
+
+
+def _double_matrix_lit(rows) -> Column:
+    """``array<array<double>>`` literal of ``rows``, parsed in one JVM
+    call (:func:`_double_array_sql`)."""
+    return F.expr("array(" + ", ".join(_double_array_sql(v) for v in rows) + ")")
 
 
 def _double_array_sql(values) -> str:
@@ -1244,7 +1251,7 @@ def _vector_upsert_index(
         path,
     ).persist()
     batch_ids = assigned.select("vec_id").distinct()
-    idx = spark.read.parquet(path)
+    idx = scan_parquet(spark, path)
     old_parts = {
         r[pcol]
         for r in idx.join(F.broadcast(batch_ids), "vec_id")

@@ -109,6 +109,10 @@ def table_path(sf_dir: str, name: str) -> str:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one fixture table, normalizing physical quirks.
 
+    The scan goes through :func:`sources.files.scan_parquet`: its
+    schema is inferred once per session per file-set, so only the
+    first load of a table runs Spark's footer-inference job.
+
     ``events.ts`` has shipped in two physical encodings: parquet
     TIMESTAMP(NANOS) (read as a nanos long under ``nanosAsLong``) and
     parquet ``timestamp[us]`` without UTC adjustment (read as
@@ -121,11 +125,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType, TimestampNTZType
 
+    from spatially_databricks_etl_spark.sources.files import scan_parquet
+
     if name == "events":
         # Runtime-settable; required even on externally-built sessions
         # (e.g. the verify driver's) or the ns-timestamp scan fails.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = scan_parquet(spark, table_path(sf_dir, name))
     if name == "events":
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, LongType):
@@ -142,7 +148,8 @@ def load_tables(
     register_views: bool = True,
 ) -> dict[str, DataFrame]:
     """Scan the fixture parquet tables (schema comes from parquet
-    footers — columnar, self-describing, pushdown-friendly).
+    footers, resolved once per session — columnar, self-describing,
+    pushdown-friendly).
 
     Registers each as a temp view so the SQL surface (the reference's
     entry point C, ``Spatially ETL test.py:237-250``) works too.

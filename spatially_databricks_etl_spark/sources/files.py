@@ -9,6 +9,8 @@ every reader takes ``schema=``.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
@@ -48,10 +50,129 @@ def read_json(
 
 
 def read_parquet(spark: SparkSession, path: str, *columns: str) -> DataFrame:
-    """Parquet scan; optional projection so pruning is explicit at the
-    call site (ReadSchema shrinks to the requested columns)."""
-    df = spark.read.parquet(path)
+    """Parquet scan (:func:`scan_parquet`); optional projection so
+    pruning is explicit at the call site (ReadSchema shrinks to the
+    requested columns)."""
+    df = scan_parquet(spark, path)
     return df.select(*columns) if columns else df
+
+
+# Session confs that change the schema Spark infers from parquet files.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+_SCHEMAS: dict[str, dict] = {}  # {application id: {schema key: StructType}}
+
+
+def scan_parquet(
+    spark: SparkSession, *paths: str, base_path: str | None = None
+) -> DataFrame:
+    """``spark.read.parquet(*paths)`` (under ``basePath`` when given)
+    with the schema resolved once per session per file-set. Without a
+    schema, every ``spark.read.parquet`` runs a Spark job to read a
+    footer again; here the first read of a key resolves the schema and
+    every later one passes it with ``.schema(...)``, which runs none.
+
+    The cache holds the ``StructType`` of the resolved read — what
+    Spark itself infers, partition columns included. A miss resolves
+    it from the schema Spark stored under its row-metadata key in a
+    data file's footer (read driver-side, no job; Spark's own
+    inference returns that same value), else by Spark's inference. The
+    key (:func:`_schema_key`) holds the paths, the driver-side stats of
+    every data file and the confs that change inference, so a rewrite
+    or a conf flip re-resolves; it is scoped to the SparkContext's
+    application id. A path off the driver's local filesystem
+    (``s3://``, ``abfss://``, ...) bypasses the cache."""
+    reader = spark.read if base_path is None else spark.read.option("basePath", base_path)
+    key = _schema_key(spark, paths, base_path)
+    if key is None:
+        return reader.parquet(*paths)
+    app = spark.sparkContext.applicationId
+    if app not in _SCHEMAS:
+        _SCHEMAS.clear()  # a new SparkContext: earlier entries are dead
+    schemas = _SCHEMAS.setdefault(app, {})
+    if key in schemas:
+        return reader.schema(schemas[key]).parquet(*paths)
+    footer = _footer_schema(key)
+    df = (reader if footer is None else reader.schema(footer)).parquet(*paths)
+    schemas[key] = df.schema
+    return df
+
+
+def _schema_key(spark: SparkSession, paths, base_path) -> tuple | None:
+    """The cache key of a parquet read, or ``None`` when it is not to
+    be cached: a path off the driver's local filesystem, a missing
+    path (Spark raises its own error), or a file that vanishes while
+    it is listed. Per path: its local root and the (relative name,
+    size, ``mtime_ns``, inode) of every file Spark's listing keeps,
+    walked recursively."""
+    from urllib.parse import urlparse
+
+    stats = []
+    for p in paths:
+        url = urlparse(p)
+        if url.scheme not in ("", "file"):
+            return None
+        root = url.path if url.scheme else p
+        try:
+            stats.append((root, _file_stats(root)))
+        except OSError:
+            return None
+    confs = tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS)
+    return tuple(paths), base_path, tuple(stats), confs
+
+
+def _file_stats(root: str) -> tuple:
+    if os.path.isfile(root):
+        st = os.stat(root)
+        return (("", st.st_size, st.st_mtime_ns, st.st_ino),)
+    if not os.path.isdir(root):
+        raise FileNotFoundError(root)
+    out = []
+    for d, dirs, files in os.walk(root):
+        dirs[:] = sorted(n for n in dirs if not _hidden(n))
+        for name in sorted(files):
+            if not _hidden(name):
+                full = os.path.join(d, name)
+                st = os.stat(full)
+                out.append(
+                    (os.path.relpath(full, root), st.st_size, st.st_mtime_ns, st.st_ino)
+                )
+    return tuple(out)
+
+
+def _hidden(name: str) -> bool:
+    """Names Spark's file listing skips (``_tombstones``, ``_SUCCESS``,
+    ``.crc`` files); a ``_``-prefixed partition directory such as
+    ``__cell=3`` is data."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _footer_schema(key: tuple) -> StructType | None:
+    """The schema Spark stored in the footer of the data file its own
+    inference reads (the first by path), or ``None``: not written by
+    Spark, unreadable, or ``mergeSchema`` on (Spark then merges every
+    footer)."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    _, _, stats, confs = key
+    merge = confs[_INFERENCE_CONFS.index("spark.sql.parquet.mergeSchema")]
+    files = [os.path.join(root, rel) if rel else root for root, fs in stats for rel, *_ in fs]
+    if not files or str(merge).lower() == "true":
+        return None
+    try:
+        meta = pq.read_metadata(min(files)).metadata or {}
+    except (OSError, ValueError):
+        return None
+    schema = meta.get(_SPARK_SCHEMA_KEY)
+    return StructType.fromJson(json.loads(schema)) if schema else None
 
 
 def read_jsonl_docs(
@@ -173,7 +294,7 @@ def read_parquet_evolved(
     groups: dict[str, list[str]] = {}
     schemas: dict[str, StructType] = {}
     for f in files:
-        sch = spark.read.parquet(f).schema
+        sch = scan_parquet(spark, f).schema
         key = sch.simpleString()
         groups.setdefault(key, []).append(f)
         schemas[key] = sch

@@ -1258,6 +1258,28 @@ def test_rrf_fuse_nway_weights(spark):
         rrf_fuse([])
 
 
+def test_rrf_fuse_failing_retriever_leaks_no_persist(spark):
+    """A retriever that raises while the fused frame runs surfaces its
+    error and leaves the session's persisted RDDs as they were."""
+    import pytest
+
+    from spatially_databricks_etl_spark.operators.retrieval import rrf_fuse
+
+    @F.udf("int")
+    def boom(x):
+        raise RuntimeError("retriever failed")
+
+    persisted = lambda: set(  # noqa: E731
+        spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
+    )
+    before = persisted()
+    a = spark.createDataFrame([(1, 10, 1), (1, 11, 2)], "query_id int, doc_id int, rank int")
+    bad = a.withColumn("rank", boom("rank"))
+    with pytest.raises(Exception, match="retriever failed"):
+        rrf_fuse([a, bad], weights=[1.0, 1.0], k=60, topk=10).collect()
+    assert persisted() == before
+
+
 def test_drift_chi2_matches_closed_form_and_guards_cardinality(spark):
     """Categorical drift: (a) the per-category contributions equal the
     textbook Pearson closed form replayed in Python (same IEEE op

@@ -756,6 +756,70 @@ def test_kmeans_recovers_separated_blobs_and_contracts(spark):
         kmeans_fit(df.limit(2), k=3, iters=1)
 
 
+def test_pca_and_kmeans_literals_match_per_element_form(spark):
+    """``pca_project_col`` and ``kmeans_assign`` parse their literal
+    matrices from one SQL text; the outputs are bit-identical to the
+    same expressions over one ``F.lit`` per element, non-finite model
+    values included."""
+    import struct
+
+    from spatially_databricks_etl_spark.functions.vectors import dot
+    from spatially_databricks_etl_spark.operators.embeddings import (
+        _sq_dist,
+        kmeans_assign,
+        pca_project_col,
+    )
+
+    def per_element(rows):
+        return F.array(*[F.array(*[F.lit(float(x)) for x in r]) for r in rows])
+
+    def bits(xs):
+        return [struct.pack("<d", x) for x in xs]
+
+    rng = np.random.default_rng(7)
+    vecs = rng.normal(size=(12, 6))
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>",
+    )
+    comps = rng.normal(size=(3, 6))
+    comps[2, 4] = math.inf
+    model = {"mean": rng.normal(size=6).tolist(), "components": comps.tolist()}
+    offsets = [float(np.dot(model["mean"], c)) for c in model["components"]]
+    off_lit = F.array(*[F.lit(o) for o in offsets])
+    old_pca = F.transform(
+        per_element(model["components"]),
+        lambda c, j: dot(F.col("embedding"), c) - F.get(off_lit, j),
+    )
+    got = df.select(
+        "vec_id",
+        pca_project_col(F.col("embedding"), model).alias("new"),
+        old_pca.alias("old"),
+    ).collect()
+    assert any(not math.isfinite(x) for r in got for x in r["new"])
+    for r in got:
+        assert bits(r["new"]) == bits(r["old"])
+
+    cents = [list(v) for v in rng.normal(size=(4, 6)).tolist()]
+    cents.append([math.nan] * 6)
+    cents.append([math.inf, 0.0, 0.0, 0.0, 0.0, -math.inf])
+    structs = F.transform(
+        per_element(cents),
+        lambda c, j: F.struct(_sq_dist(F.col("embedding"), c).alias("d"), j.alias("cluster")),
+    )
+    old = {
+        r["vec_id"]: (r["b"]["cluster"], r["b"]["d"])
+        for r in df.select("vec_id", F.array_min(structs).alias("b")).collect()
+    }
+    new = {
+        r["vec_id"]: (r["cluster"], r["dist2"])
+        for r in kmeans_assign(df, cents).collect()
+    }
+    assert new.keys() == old.keys()
+    for k, (cluster, d) in new.items():
+        assert cluster == old[k][0] and bits([d]) == bits([old[k][1]])
+
+
 def test_ivf_delete_index_matches_rebuild_and_compacts(spark, tmp_path):
     """Index-lifecycle delete: building the IVF index on the FULL
     corpus then tombstone-deleting half must search bit-identically to
