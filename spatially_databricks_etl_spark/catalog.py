@@ -4727,10 +4727,12 @@ def q22_dormant_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape: above-average-balance customers with NO urgent
     orders, per market segment — scalar-subquery threshold + filtered
     NOT EXISTS (anti join). The anti-join build side is filtered so
-    the result is non-empty at every fixture scale (strong oracle)."""
+    the result is non-empty at every fixture scale (strong oracle).
+    The threshold stays in the plan as a scalar subquery, so building
+    the query runs no Spark job."""
     c = _t(spark, sf_dir, "customer")
     o = _t(spark, sf_dir, "orders")
-    avg_bal = c.filter(F.col("c_acctbal") > 0).agg(F.avg("c_acctbal")).first()[0]
+    avg_bal = c.filter(F.col("c_acctbal") > 0).agg(F.avg("c_acctbal")).scalar()
     urgent = o.filter(F.col("o_orderpriority") == "1-URGENT").select("o_custkey")
     return (
         c.filter(F.col("c_acctbal") > avg_bal)

@@ -25,6 +25,7 @@ from spatially_databricks_etl_spark.caching import (
     unpersist_checkpoint,
 )
 from spatially_databricks_etl_spark.functions.text import quality_score
+from spatially_databricks_etl_spark.sources.arrow import arrow_frame
 from spatially_databricks_etl_spark.operators.dedup import (
     exact_dedup,
     minhash_near_dedup,
@@ -2824,8 +2825,8 @@ def _bpe_rounds(
             break
         t = top_rows[0]
         merge_rows.append((rnd, t["__a"], t["__b"], t["__cnt"], t["__score"]))
-        pair = docs.sparkSession.createDataFrame(
-            [(t["__a"], t["__b"])], "__a string, __b string"
+        pair = arrow_frame(
+            docs.sparkSession, [(t["__a"], t["__b"])], "__a string, __b string"
         )
         syms = _superseding(
             syms,
@@ -2833,7 +2834,8 @@ def _bpe_rounds(
             .repartition(parts, "word")
             .localCheckpoint(eager=True),
         )
-    merges_df = docs.sparkSession.createDataFrame(
+    merges_df = arrow_frame(
+        docs.sparkSession,
         merge_rows,
         "round long, left_sym string, right_sym string,"
         " pair_count long, score long",
@@ -2986,7 +2988,7 @@ def bpe_encode(
     )
     spark = docs.sparkSession
     for left, right in merge_rules:
-        pair = spark.createDataFrame([(left, right)], "__a string, __b string")
+        pair = arrow_frame(spark, [(left, right)], "__a string, __b string")
         syms = (
             _bpe_apply_merge(syms, pair, carry=["word"])
             .repartition("word")
@@ -3316,7 +3318,9 @@ def bpe_load_merges(spark, path: str) -> list[tuple[str, str]]:
     :func:`bpe_encode` consumes (training order = ``round`` order).
     The artifact is rounds-sized — a bounded-metadata read, the
     kmeans-centroid class."""
-    rows = spark.read.parquet(path).orderBy("round").collect()
+    from spatially_databricks_etl_spark.sources.files import scan_parquet
+
+    rows = scan_parquet(spark, path).orderBy("round").collect()
     return [(r["left_sym"], r["right_sym"]) for r in rows]
 
 

@@ -25,7 +25,7 @@ from spatially_databricks_etl_spark.caching import register_persists
 from spatially_databricks_etl_spark.functions.text import ngrams, tokens
 from spatially_databricks_etl_spark.operators.relational import ensure_parallelism
 from spatially_databricks_etl_spark.operators.similarity import ANN_MAX_QUERIES
-from spatially_databricks_etl_spark.sources.files import scan_parquet
+from spatially_databricks_etl_spark.sources.arrow import arrow_frame
 
 
 def exact_dedup(df: DataFrame, subset: list[str], *, keep_by: str | None = None) -> DataFrame:
@@ -526,12 +526,14 @@ def minhash_pairs_from_index(
     ``id_a < id_b``, with the same ``lsh_observation`` cap-visibility
     contract.
     """
-    banded = scan_parquet(spark, f"{path}/bands").select("__id", "__band", "__bh")
+    from spatially_databricks_etl_spark.operators.indexstore import read_store
+
+    banded = read_store(spark, f"{path}/bands", "__bhb").select("__id", "__band", "__bh")
     # persist the shingle store scan: both verify sides consume it, and
     # one cached columnar read beats two passes over the 64-way
     # partitioned directory tree (release via release_intermediates)
     shingles = (
-        scan_parquet(spark, f"{path}/shingles")
+        read_store(spark, f"{path}/shingles", "__pb")
         .select("__id", "__h")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -859,6 +861,7 @@ def minhash_write_index(
         begin_index_mutation,
         commit_index_mutation,
         write_meta_sidecar,
+        write_partitioned,
     )
 
     if num_hashes % bands != 0:
@@ -878,13 +881,12 @@ def minhash_write_index(
         .filter(F.size("__h") > 0)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # repartition by the partition column before every partitioned
-    # write (guide §6): one writer-task run per directory instead of a
-    # tasks×dirs small-file storm; AQE coalesces the exchange output
-    base.select(
-        "__id", "__h", F.pmod(F.xxhash64("__id"), F.lit(hash_buckets)).alias("__pb")
-    ).repartition("__pb").write.mode("overwrite").partitionBy("__pb").parquet(
-        f"{path}/shingles"
+    write_partitioned(
+        base.select(
+            "__id", "__h", F.pmod(F.xxhash64("__id"), F.lit(hash_buckets)).alias("__pb")
+        ),
+        f"{path}/shingles",
+        "__pb",
     )
     sig = minhash_signatures_df(
         base.select("__id", "__h"),
@@ -893,10 +895,12 @@ def minhash_write_index(
         num_hashes=num_hashes,
         seed=seed,
     )
-    _band_rows(sig, bands=bands, rows=rows).withColumn(
-        "__bhb", F.pmod(F.xxhash64("__bh"), F.lit(hash_buckets))
-    ).repartition("__bhb").write.mode("overwrite").partitionBy("__bhb").parquet(
-        f"{path}/bands"
+    write_partitioned(
+        _band_rows(sig, bands=bands, rows=rows).withColumn(
+            "__bhb", F.pmod(F.xxhash64("__bh"), F.lit(hash_buckets))
+        ),
+        f"{path}/bands",
+        "__bhb",
     )
     base.unpersist()
     write_meta_sidecar(
@@ -926,8 +930,10 @@ def minhash_append_index(
     shingled and signed with the sidecar's pinned parameters
     (shingling, signatures and band keys are per-document and
     seed-deterministic, so append ≡ rebuild exactly — pinned by
-    test), and its band/shingle rows land as additional files inside
-    the existing ``__bhb=``/``__pb=`` partition directories. The
+    test), and its band/shingle rows land as ONE sorted run per store
+    (``indexstore.write_runs``: O(batch) files, however many
+    ``__bhb=``/``__pb=`` directories the rows hash to), read beside
+    the partitions until a compaction or upsert folds it in. The
     standing corpus is never re-shingled, never re-signed. Caller
     contract: batch ids are NEW — never present in the index, not
     even as tombstoned rows. Re-ingesting an id duplicates its rows,
@@ -940,12 +946,11 @@ def minhash_append_index(
     route (both pinned by test)."""
     from spatially_databricks_etl_spark.operators.indexstore import (
         begin_index_mutation,
-        commit_index_mutation,
         read_meta_sidecar,
+        write_runs,
     )
 
     ver = begin_index_mutation(path)
-    spark = new_docs.sparkSession
     meta = read_meta_sidecar(f"{path}/_minhash_meta", "minhash_params_json")
     bands, num_hashes = meta["bands"], meta["num_hashes"]
     hash_buckets, seed = meta["hash_buckets"], meta["seed"]
@@ -960,12 +965,6 @@ def minhash_append_index(
         .filter(F.size("__h") > 0)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    commit_index_mutation(path, ver)  # claim before the first visible write
-    base.select(
-        "__id", "__h", F.pmod(F.xxhash64("__id"), F.lit(hash_buckets)).alias("__pb")
-    ).repartition("__pb").write.mode("append").partitionBy("__pb").parquet(
-        f"{path}/shingles"
-    )
     sig = minhash_signatures_df(
         base.select("__id", "__h"),
         hash_col="__h",
@@ -973,12 +972,38 @@ def minhash_append_index(
         num_hashes=num_hashes,
         seed=seed,
     )
-    _band_rows(sig, bands=bands, rows=rows).withColumn(
-        "__bhb", F.pmod(F.xxhash64("__bh"), F.lit(hash_buckets))
-    ).repartition("__bhb").write.mode("append").partitionBy("__bhb").parquet(
-        f"{path}/bands"
+    # both runs stage first; the version is claimed before either is
+    # published
+    write_runs(
+        path,
+        ver,
+        [
+            (
+                base.select(
+                    "__id",
+                    "__h",
+                    F.pmod(F.xxhash64("__id"), F.lit(hash_buckets)).alias("__pb"),
+                ),
+                f"{path}/shingles",
+                "__pb",
+            ),
+            (
+                _band_rows(sig, bands=bands, rows=rows).withColumn(
+                    "__bhb", F.pmod(F.xxhash64("__bh"), F.lit(hash_buckets))
+                ),
+                f"{path}/bands",
+                "__bhb",
+            ),
+        ],
     )
     base.unpersist()
+
+
+def _distinct_keys(keys: DataFrame) -> list:
+    """The sorted distinct values of ``keys``' one column, with one
+    collect: the partition keys an upsert rewrites."""
+    col = keys.columns[0]
+    return sorted({r[col] for r in keys.distinct().collect()})
 
 
 def minhash_upsert_index(
@@ -1019,6 +1044,12 @@ def minhash_upsert_index(
       id's rows leave BOTH stores together only in
       :func:`minhash_compact_index` (index-scoped, tombstones cleared
       last). Swaps are crash-safe (``indexstore.swap_partitions``).
+    - runs appends left beside either store are folded, not added to
+      the partition rewrite: the rows of the runs that hold a batch
+      id, minus the batch ids, become one replacement run that the
+      same swap moves in while those runs move aside, so each row
+      stays visible exactly once and the upsert costs O(affected
+      partitions + runs); runs holding no batch id stay as they are.
 
     A batch doc whose text yields zero shingles contributes no rows
     — upserting an id to empty text is equivalent to deleting it,
@@ -1027,8 +1058,11 @@ def minhash_upsert_index(
         begin_index_mutation,
         commit_index_mutation,
         heal_partition_swap,
+        list_runs,
         read_meta_sidecar,
+        read_store,
         shed_tombstones,
+        stage_rewrite,
         swap_partitions,
     )
 
@@ -1039,6 +1073,7 @@ def minhash_upsert_index(
     heal_partition_swap(f"{path}/bands")
     heal_partition_swap(f"{path}/shingles")
     ver = begin_index_mutation(path)
+    runs_b, runs_s = list_runs(f"{path}/bands"), list_runs(f"{path}/shingles")
 
     spark = new_docs.sparkSession
     meta = read_meta_sidecar(f"{path}/_minhash_meta", "minhash_params_json")
@@ -1069,22 +1104,15 @@ def minhash_upsert_index(
     ).persist(StorageLevel.MEMORY_AND_DISK)
 
     # ---- shingle store: affected partitions are the batch ids' own
-    # hash directories (old and new rows share them — keyed on id)
-    pbs = sorted(
-        {
-            r["__pb"]
-            for r in batch_ids.select(
-                F.pmod(F.xxhash64("__id"), F.lit(hash_buckets)).alias("__pb")
-            )
-            .distinct()
-            .collect()
-        }
+    # hash directories (old and new rows share them — keyed on id); the
+    # locator read takes the runs too, so old rows an append left in a
+    # run locate their band partitions as well
+    pbs = _distinct_keys(
+        batch_ids.select(F.pmod(F.xxhash64("__id"), F.lit(hash_buckets)).alias("__pb"))
     )
-    old_sh = (
-        scan_parquet(spark, f"{path}/shingles")
-        .filter(F.col("__pb").isin(pbs))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    old_sh = read_store(
+        spark, f"{path}/shingles", "__pb", pbs, runs=runs_s
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     # old band rows reconstruct exactly from the stored codes
     old_mine = old_sh.join(F.broadcast(batch_ids), "__id").select("__id", "__h")
     old_sig = minhash_signatures_df(
@@ -1101,8 +1129,7 @@ def minhash_upsert_index(
         .distinct()
         .collect()
     }
-    new_bhbs = {r["__bhb"] for r in new_bands.select("__bhb").distinct().collect()}
-    bhbs = sorted(old_bhbs | new_bhbs)
+    bhbs = sorted(old_bhbs | set(_distinct_keys(new_bands.select("__bhb"))))
 
     # ---- rewrite the affected band partitions: drop every batch-id
     # row, add the new band rows. OTHER ids' rows — including
@@ -1111,23 +1138,25 @@ def minhash_upsert_index(
     # one store but not the other (its band rows can live in
     # partitions this upsert never touches) would make the id's old
     # content unreconstructable and a later upsert/shed of it unsafe.
-    keep_b = scan_parquet(spark, f"{path}/bands").filter(
-        F.col("__bhb").isin(bhbs)
-    ).join(F.broadcast(batch_ids), "__id", "left_anti")
+    # The runs holding batch ids, minus those ids, are staged as one
+    # replacement run.
+    keep_b = read_store(spark, f"{path}/bands", "__bhb", bhbs, runs=[]).join(
+        F.broadcast(batch_ids), "__id", "left_anti"
+    )
     content_b = keep_b.select("__id", "__band", "__bh", "__bhb").unionByName(
         new_bands.select("__id", "__band", "__bh", "__bhb")
     )
     staged_b = f"{path}/bands.__upsert_staged"
-    content_b.repartition("__bhb").write.mode("overwrite").partitionBy(
-        "__bhb"
-    ).parquet(staged_b)
+    runs_b = stage_rewrite(content_b, staged_b, "__bhb", runs_b, batch_ids)
     commit_index_mutation(path, ver)  # claim before the first visible swap
-    swap_partitions(staged_b, f"{path}/bands", "__bhb", bhbs)
+    swap_partitions(staged_b, f"{path}/bands", "__bhb", bhbs, runs_b)
 
     # ---- rewrite the affected shingle partitions likewise (same
     # keep-tombstoned-codes rule — those codes are the band-partition
     # locator for any future upsert of their id)
-    keep_s = old_sh.join(F.broadcast(batch_ids), "__id", "left_anti")
+    keep_s = read_store(spark, f"{path}/shingles", "__pb", pbs, runs=[]).join(
+        F.broadcast(batch_ids), "__id", "left_anti"
+    )
     content_s = keep_s.select("__id", "__h", "__pb").unionByName(
         base.select(
             "__id",
@@ -1136,10 +1165,8 @@ def minhash_upsert_index(
         )
     )
     staged_s = f"{path}/shingles.__upsert_staged"
-    content_s.repartition("__pb").write.mode("overwrite").partitionBy(
-        "__pb"
-    ).parquet(staged_s)
-    swap_partitions(staged_s, f"{path}/shingles", "__pb", pbs)
+    runs_s = stage_rewrite(content_s, staged_s, "__pb", runs_s, batch_ids)
+    swap_partitions(staged_s, f"{path}/shingles", "__pb", pbs, runs_s)
 
     # re-ingested ids shed any standing tombstone — safe now that
     # their old rows are physically gone
@@ -1187,9 +1214,8 @@ def minhash_search_index(
         anti_tombstones,
         apply_allowed_ids,
         collect_probe_batch,
-        probe_frame,
         read_meta_sidecar,
-        read_probed_partitions,
+        read_store,
     )
 
     spark = batch.sparkSession
@@ -1227,7 +1253,7 @@ def minhash_search_index(
         for r in collect_probe_batch(routed, "minhash_search_index", max_queries)
         if r["__h"]
     ]
-    probe = probe_frame(spark, docs, routed.schema)
+    probe = arrow_frame(spark, docs, routed.schema)
     b_bands = probe.select(
         F.col("__id").alias("batch_id"), F.explode("__bands").alias("__b")
     ).select(
@@ -1242,7 +1268,7 @@ def minhash_search_index(
     # may match; batch docs and the Jaccard values are unaffected
     idx_bands = apply_allowed_ids(
         anti_tombstones(
-            read_probed_partitions(
+            read_store(
                 spark,
                 f"{path}/bands",
                 "__bhb",
@@ -1270,7 +1296,7 @@ def minhash_search_index(
         .distinct()
         .collect()
     ]
-    shingles = read_probed_partitions(spark, f"{path}/shingles", "__pb", pbs).select(
+    shingles = read_store(spark, f"{path}/shingles", "__pb", pbs).select(
         F.col("__id").alias("indexed_id"), F.col("__h").alias("__sh_i")
     )
     out = (
@@ -1312,11 +1338,19 @@ def minhash_delete_index(
 def minhash_compact_index(spark, path: str) -> None:
     """Major compaction of a persisted MinHash index: rewrite the
     band store and the shingle store without tombstoned documents —
-    folding append generations into one file group per partition
+    folding the appends' runs into one file group per partition
     directory while at it — then clear the tombstones. One
     partitioned rewrite of each store (index-sized, the corpus is
     never re-shingled); results identical before/after (pinned by
     test)."""
+    _compact_stores(spark, path, (("bands", "__bhb"), ("shingles", "__pb")))
+
+
+def _compact_stores(spark, path: str, stores) -> None:
+    """The major compaction of a two-store fingerprint index (MinHash,
+    SimHash): each ``(sub, partition_col)`` store is rewritten from its
+    partitions and runs without tombstoned ids, swapped in whole (the
+    runs vanish with the old store), then the tombstones clear."""
     import shutil
 
     from spatially_databricks_etl_spark.operators.indexstore import (
@@ -1324,20 +1358,21 @@ def minhash_compact_index(spark, path: str) -> None:
         begin_index_mutation,
         clear_tombstones,
         commit_index_mutation,
+        heal_partition_swap,
+        read_store,
         swap_directory,
+        write_partitioned,
     )
 
+    for sub, _ in stores:
+        heal_partition_swap(f"{path}/{sub}")
     ver = begin_index_mutation(path)
     commit_index_mutation(path, ver)  # arbitrate vs concurrent mutators
-    for sub, pcol in (("bands", "__bhb"), ("shingles", "__pb")):
-        live = anti_tombstones(
-            scan_parquet(spark, f"{path}/{sub}"), path, "__id"
-        )
+    for sub, pcol in stores:
+        live = anti_tombstones(read_store(spark, f"{path}/{sub}", pcol), path, "__id")
         staged = f"{path}/{sub}_staged"
         shutil.rmtree(staged, ignore_errors=True)
-        live.repartition(pcol).write.mode("overwrite").partitionBy(pcol).parquet(
-            staged
-        )
+        write_partitioned(live, staged, pcol)
         swap_directory(staged, f"{path}/{sub}")
     clear_tombstones(path)
 
@@ -1433,6 +1468,7 @@ def simhash_write_index(
         begin_index_mutation,
         commit_index_mutation,
         write_meta_sidecar,
+        write_partitioned,
     )
 
     if 64 % chunks != 0:
@@ -1448,21 +1484,16 @@ def simhash_write_index(
     # codes store — _simhash_band_rows is pure in (code, params) —
     # minus one directory listing + scan)
     coded = simhash_codes(src, seed=seed).persist(StorageLevel.MEMORY_AND_DISK)
-    # repartition by the partition column before every partitioned
-    # write (guide §6): without it each upstream task opens a file in
-    # every partition directory it holds a row for — a tasks×dirs
-    # small-file storm at any scale; with it AQE coalesces to few
-    # writer tasks and each directory gets contiguous row runs
-    coded.withColumn(
-        "__pb", F.pmod(F.xxhash64("__id"), F.lit(hash_buckets))
-    ).repartition("__pb").write.mode("overwrite").partitionBy("__pb").parquet(
-        f"{path}/codes"
+    write_partitioned(
+        coded.withColumn("__pb", F.pmod(F.xxhash64("__id"), F.lit(hash_buckets))),
+        f"{path}/codes",
+        "__pb",
     )
-    _simhash_band_rows(
-        coded, chunks=chunks, hash_buckets=hash_buckets
-    ).select("__id", "__sh", "__chunk", "__cv", "__cb").repartition(
-        "__cb"
-    ).write.mode("overwrite").partitionBy("__cb").parquet(f"{path}/bands")
+    write_partitioned(
+        _simhash_band_rows(coded, chunks=chunks, hash_buckets=hash_buckets),
+        f"{path}/bands",
+        "__cb",
+    )
     coded.unpersist()
     write_meta_sidecar(
         f"{path}/_simhash_meta",
@@ -1489,13 +1520,14 @@ def simhash_append_index(
     """Append a NEW document batch to a persisted SimHash index: only
     the batch is fingerprinted (the sidecar pins chunks/seed, and
     fingerprints are per-document, so append ≡ rebuild exactly —
-    pinned by test); its rows land as additional files inside the
-    existing partition directories. Caller contract (the family's
+    pinned by test); its rows land as ONE sorted run per store
+    (``indexstore.write_runs``), O(batch) files however many partition
+    directories they hash to. Caller contract (the family's
     appender contract): batch ids are NEW — route replacements
     through :func:`simhash_upsert_index`."""
     from spatially_databricks_etl_spark.operators.indexstore import (
         begin_index_mutation,
-        commit_index_mutation,
+        write_runs,
     )
 
     spark = new_docs.sparkSession
@@ -1508,16 +1540,25 @@ def simhash_append_index(
     coded = simhash_codes(src, seed=meta["seed"]).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    commit_index_mutation(path, ver)  # claim before the first visible write
-    coded.withColumn(
-        "__pb", F.pmod(F.xxhash64("__id"), F.lit(meta["hash_buckets"]))
-    ).repartition("__pb").write.mode("append").partitionBy("__pb").parquet(
-        f"{path}/codes"
-    )
-    _simhash_band_rows(
-        coded, chunks=meta["chunks"], hash_buckets=meta["hash_buckets"]
-    ).repartition("__cb").write.mode("append").partitionBy("__cb").parquet(
-        f"{path}/bands"
+    write_runs(
+        path,
+        ver,
+        [
+            (
+                coded.withColumn(
+                    "__pb", F.pmod(F.xxhash64("__id"), F.lit(meta["hash_buckets"]))
+                ),
+                f"{path}/codes",
+                "__pb",
+            ),
+            (
+                _simhash_band_rows(
+                    coded, chunks=meta["chunks"], hash_buckets=meta["hash_buckets"]
+                ),
+                f"{path}/bands",
+                "__cb",
+            ),
+        ],
     )
     coded.unpersist()
 
@@ -1553,8 +1594,7 @@ def simhash_search_index(
         anti_tombstones,
         apply_allowed_ids,
         collect_probe_batch,
-        probe_frame,
-        read_probed_partitions,
+        read_store,
     )
 
     spark = batch.sparkSession
@@ -1573,12 +1613,12 @@ def simhash_search_index(
         ).alias("__bands"),
     )
     docs = collect_probe_batch(routed, "simhash_search_index", max_queries)
-    left = probe_frame(spark, docs, routed.schema).select(
+    left = arrow_frame(spark, docs, routed.schema).select(
         F.col("__id").alias("batch_id"),
         F.col("__sh").alias("__sh_a"),
         F.explode("__bands").alias("__b"),
     ).select("batch_id", "__sh_a", F.col("__b.chunk").alias("__chunk"), F.col("__b.cv").alias("__cv"))
-    idx = read_probed_partitions(
+    idx = read_store(
         spark, f"{path}/bands", "__cb", [b["cb"] for r in docs for b in r["__bands"]]
     )
     idx = anti_tombstones(idx, path, "__id")
@@ -1633,27 +1673,7 @@ def simhash_compact_index(spark, path: str) -> None:
     its band-partition locator until compaction removes both) — then
     clear the tombstones. Results identical before/after (pinned by
     test)."""
-    import shutil
-
-    from spatially_databricks_etl_spark.operators.indexstore import (
-        anti_tombstones,
-        begin_index_mutation,
-        clear_tombstones,
-        commit_index_mutation,
-        swap_directory,
-    )
-
-    ver = begin_index_mutation(path)
-    commit_index_mutation(path, ver)  # arbitrate vs concurrent mutators
-    for sub, pcol in (("bands", "__cb"), ("codes", "__pb")):
-        live = anti_tombstones(scan_parquet(spark, f"{path}/{sub}"), path, "__id")
-        staged = f"{path}/{sub}_staged"
-        shutil.rmtree(staged, ignore_errors=True)
-        live.repartition(pcol).write.mode("overwrite").partitionBy(pcol).parquet(
-            staged
-        )
-        swap_directory(staged, f"{path}/{sub}")
-    clear_tombstones(path)
+    _compact_stores(spark, path, (("bands", "__cb"), ("codes", "__pb")))
 
 
 def simhash_upsert_index(
@@ -1675,18 +1695,24 @@ def simhash_upsert_index(
     touched partitions are deliberately KEPT — the same invariant as
     :func:`minhash_upsert_index` (a tombstoned id's stored code is
     the only locator for its band partitions; rows leave both stores
-    together only at compaction)."""
+    together only at compaction). Runs appends left in either store
+    that hold a batch id fold into one replacement run, as in
+    :func:`minhash_upsert_index`."""
     from spatially_databricks_etl_spark.operators.indexstore import (
         begin_index_mutation,
         commit_index_mutation,
         heal_partition_swap,
+        list_runs,
+        read_store,
         shed_tombstones,
+        stage_rewrite,
         swap_partitions,
     )
 
     heal_partition_swap(f"{path}/bands")
     heal_partition_swap(f"{path}/codes")
     ver = begin_index_mutation(path)
+    runs_b, runs_c = list_runs(f"{path}/bands"), list_runs(f"{path}/codes")
     spark = new_docs.sparkSession
     meta = _simhash_meta(spark, path)
     chunks, hash_buckets = meta["chunks"], meta["hash_buckets"]
@@ -1703,21 +1729,12 @@ def simhash_upsert_index(
         new_coded, chunks=chunks, hash_buckets=hash_buckets
     ).persist(StorageLevel.MEMORY_AND_DISK)
 
-    pbs = sorted(
-        {
-            r["__pb"]
-            for r in batch_ids.select(
-                F.pmod(F.xxhash64("__id"), F.lit(hash_buckets)).alias("__pb")
-            )
-            .distinct()
-            .collect()
-        }
+    pbs = _distinct_keys(
+        batch_ids.select(F.pmod(F.xxhash64("__id"), F.lit(hash_buckets)).alias("__pb"))
     )
-    old_codes = (
-        scan_parquet(spark, f"{path}/codes")
-        .filter(F.col("__pb").isin(pbs))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    old_codes = read_store(
+        spark, f"{path}/codes", "__pb", pbs, runs=runs_c
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     old_mine = old_codes.join(F.broadcast(batch_ids), "__id").select("__id", "__sh")
     old_cbs = {
         r["__cb"]
@@ -1728,23 +1745,22 @@ def simhash_upsert_index(
         .distinct()
         .collect()
     }
-    new_cbs = {r["__cb"] for r in new_bands.select("__cb").distinct().collect()}
-    cbs = sorted(old_cbs | new_cbs)
+    cbs = sorted(old_cbs | set(_distinct_keys(new_bands.select("__cb"))))
 
-    keep_b = scan_parquet(spark, f"{path}/bands").filter(
-        F.col("__cb").isin(cbs)
-    ).join(F.broadcast(batch_ids), "__id", "left_anti")
+    keep_b = read_store(spark, f"{path}/bands", "__cb", cbs, runs=[]).join(
+        F.broadcast(batch_ids), "__id", "left_anti"
+    )
     content_b = keep_b.select("__id", "__sh", "__chunk", "__cv", "__cb").unionByName(
         new_bands.select("__id", "__sh", "__chunk", "__cv", "__cb")
     )
     staged_b = f"{path}/bands.__upsert_staged"
-    content_b.repartition("__cb").write.mode("overwrite").partitionBy(
-        "__cb"
-    ).parquet(staged_b)
+    runs_b = stage_rewrite(content_b, staged_b, "__cb", runs_b, batch_ids)
     commit_index_mutation(path, ver)  # claim before the first visible swap
-    swap_partitions(staged_b, f"{path}/bands", "__cb", cbs)
+    swap_partitions(staged_b, f"{path}/bands", "__cb", cbs, runs_b)
 
-    keep_c = old_codes.join(F.broadcast(batch_ids), "__id", "left_anti")
+    keep_c = read_store(spark, f"{path}/codes", "__pb", pbs, runs=[]).join(
+        F.broadcast(batch_ids), "__id", "left_anti"
+    )
     content_c = keep_c.select("__id", "__sh", "__pb").unionByName(
         new_coded.select(
             "__id",
@@ -1753,10 +1769,8 @@ def simhash_upsert_index(
         )
     )
     staged_c = f"{path}/codes.__upsert_staged"
-    content_c.repartition("__pb").write.mode("overwrite").partitionBy(
-        "__pb"
-    ).parquet(staged_c)
-    swap_partitions(staged_c, f"{path}/codes", "__pb", pbs)
+    runs_c = stage_rewrite(content_c, staged_c, "__pb", runs_c, batch_ids)
+    swap_partitions(staged_c, f"{path}/codes", "__pb", pbs, runs_c)
 
     shed_tombstones(spark, path, batch_ids, id_col="__id")
     for df in (batch_ids, new_coded, new_bands, old_codes):

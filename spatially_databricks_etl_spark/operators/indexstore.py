@@ -50,13 +50,32 @@ into one:
    collect by the family's own Spark expressions (routing stays
    bit-identical to the in-memory operators), overflow raises.
 2. The probe/broadcast side is built from those rows with one
-   ``createDataFrame(pyarrow.Table)`` (:func:`probe_frame`) — the
-   caller's frame is never read again.
+   ``createDataFrame(pyarrow.Table)`` (:func:`sources.arrow.arrow_frame`)
+   — the caller's frame is never read again.
 3. Only the probed partition directories that exist are read, under
-   ``basePath`` and a static ``isin`` filter
-   (:func:`read_probed_partitions`): the plan keeps its
+   ``basePath`` and a static ``isin`` filter, united with the store's
+   runs under the same filter (:func:`read_store`): the plan keeps its
    ``PartitionFilters`` and the index root is never listed.
 4. The tombstone anti-join, the candidate join and the exact scoring.
+
+Appends are log-structured too. A partitioned store (MinHash, SimHash,
+LSH, IVF, IVF-PQ) takes each append as ONE sorted run
+(:func:`write_runs`): the batch sorted by its partition key within its
+partitions, no shuffle, staged under ``{store}/_runs`` and published
+with one rename to ``_runs/run-v{N}`` once the mutation version is
+claimed — all of it visible or none. An append therefore writes
+O(batch) files, however many partition directories its rows hash to.
+Every read of a store (:func:`read_store`) is its partition
+directories united with its runs; with no run the read is the
+directory read alone. A major compaction folds the runs for free (they
+live inside the root it swaps out). An upsert still rewrites only the
+partitions its batch ids leave or enter; it rewrites the runs that
+hold a batch id, minus the batch ids, as ONE replacement run
+(:func:`stage_rewrite`), which the same crash-safe
+:func:`swap_partitions` moves in while those runs move aside, so an
+upsert costs O(affected partitions + runs) and every row stays visible
+exactly once. Runs holding no batch id are left as they are. BM25 is not partitioned: its appends
+add whole range-sorted postings files.
 
 Sidecars, probed directories and optional stores are located through
 the DRIVER's local filesystem, like every primitive here (SCALE.md,
@@ -87,6 +106,8 @@ per family pin it (the ``sinks/versioned.py`` test is the template).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -95,6 +116,11 @@ from spatially_databricks_etl_spark.sources.files import scan_parquet
 #: Subdirectory (underscore-prefixed → invisible to partition
 #: discovery) holding tombstoned ids as parquet, one column ``id``.
 TOMBSTONE_DIR = "_tombstones"
+
+#: Subdirectory of a partitioned store holding its sorted runs, one
+#: ``run-v{N}`` directory per append (underscore-prefixed → invisible
+#: to partition discovery, like the tombstones).
+RUNS_DIR = "_runs"
 
 #: Mutation-version marks for the optimistic multi-writer arbiter:
 #: one empty ``v=N`` directory per committed (or claimed) mutation,
@@ -362,32 +388,60 @@ def clear_tombstones(path: str) -> None:
     shutil.rmtree(f"{path}/{TOMBSTONE_DIR}", ignore_errors=True)
 
 
+_SWAP_PLAN = "_plan.json"  # inside {live}.__upsert_old: what the swap does
+_SWAP_MOVED = "_moved"  # written once every old copy is aside
+_FOLDED_RUN = "folded"  # the replacement run, staged under {staged}/_runs
+
+
 def heal_partition_swap(live: str) -> bool:
     """SELF-HEAL a crashed :func:`swap_partitions` (VERDICT r11 item
     6): a crash between its rename loops leaves live partitions
     stranded under ``{live}.__upsert_old`` — previously a
-    manual-recovery state. Restore every partition directory that was
-    moved aside but whose replacement never got installed (live path
-    missing), discard aside copies whose replacements DID land, then
-    clear the aside directory. Returns True when a leftover state was
+    manual-recovery state. Returns True when a leftover state was
     found (and healed), False when there was nothing to do.
 
-    The healed store is the crashed upsert PARTIALLY applied: every
-    partition exists (old or new content) and every non-batch row is
-    intact in either version, so re-running the interrupted upsert —
-    which recomputes its affected-partition rewrite from the healed
-    live state — completes it exactly (pinned by test); any OTHER
-    subsequent upsert/compaction on the root is likewise correct.
-    Called automatically at the entry of :func:`swap_partitions` and
-    of every partition-scoped upsert before it READS the live store
-    (a half-swapped read would otherwise see missing partitions);
-    also public for explicit startup recovery."""
+    A swap that recorded its plan is FINISHED: the old copies of the
+    affected partitions and the folded runs still live move aside, the
+    staged partitions and replacement run that were not yet installed
+    move in, and the old copies are deleted. Finishing, not undoing, is
+    what keeps every row visible exactly once: the replacement run
+    already holds the folded runs' rows, so restoring the runs beside a
+    partly installed rewrite would show those rows twice. The finished
+    swap renames its aside directory, plan included, to
+    ``{live}.__upsert_done`` before deleting it, so a crash during that
+    delete leaves a directory the heal only removes. Without a plan (a
+    crash before it was written, or a swap by an older release)
+    nothing but partitions can be aside: every partition directory
+    whose replacement never got installed (live path missing) is
+    restored, aside copies whose replacements DID land are
+    discarded.
+
+    Either way the healed store is the crashed upsert applied to this
+    store, or partly applied (every partition exists, old or new
+    content, and every non-batch row is intact in either version), so
+    re-running the interrupted upsert — which recomputes its
+    affected-partition rewrite from the healed live state — completes
+    it exactly (pinned by test); any OTHER subsequent
+    upsert/compaction on the root is likewise correct. Called
+    automatically at the entry of :func:`swap_partitions`, of every
+    partition-scoped upsert before it READS the live store (a
+    half-swapped read would otherwise see missing partitions) and of
+    every compaction; also public for explicit startup recovery."""
+    import json
     import os
     import shutil
 
+    done = f"{live.rstrip('/')}.__upsert_done"
+    healed = os.path.isdir(done)
+    shutil.rmtree(done, ignore_errors=True)
     olddir = f"{live.rstrip('/')}.__upsert_old"
     if not os.path.isdir(olddir):
-        return False
+        return healed
+    plan_file = os.path.join(olddir, _SWAP_PLAN)
+    if os.path.exists(plan_file):
+        with open(plan_file) as fh:
+            _finish_swap(live, olddir, json.load(fh))
+        return True
     for name in os.listdir(olddir):
         if "=" not in name:
             continue
@@ -398,32 +452,78 @@ def heal_partition_swap(live: str) -> bool:
     return True
 
 
-def swap_partitions(staged: str, live: str, partition_col: str, affected: list) -> None:
-    """Crash-safe install of a staged partitioned rewrite over the
-    AFFECTED partition directories of a live index root: the live
-    copies move aside first (never rmtree'd while the replacements
-    are uninstalled), the staged ``{col}={v}`` directories move in,
-    and the old copies are deleted LAST — the per-partition form of
+def swap_partitions(
+    staged: str, live: str, partition_col: str, affected: list, runs: list = ()
+) -> None:
+    """Crash-safe install of a staged partitioned rewrite
+    (:func:`stage_rewrite`) over the AFFECTED partition directories of
+    a live index root: the live copies — and the ``runs`` (paths from
+    :func:`list_runs`) whose rows the staged replacement run holds —
+    move aside first (never rmtree'd while the replacements are
+    uninstalled), the staged ``{col}={v}`` directories move in, the
+    replacement run moves in under the newest folded run's name, and
+    the old copies are deleted LAST — the per-partition form of
     :func:`swap_directory`, shared by every partition-scoped upsert
-    (vector indexes, MinHash). A leftover half-swapped state from a
-    crashed run is healed on entry (:func:`heal_partition_swap`),
+    (vector indexes, MinHash, SimHash). The plan is written into the
+    aside directory before the first rename, so a crash at any point is
+    finished by :func:`heal_partition_swap` — run on entry here,
     matching ``swap_directory``'s clear-``.__old``-on-next-run
     discipline."""
+    import json
     import os
-    import shutil
 
     heal_partition_swap(live)
     olddir = f"{live.rstrip('/')}.__upsert_old"
     os.makedirs(olddir)
-    for v in affected:
-        src = os.path.join(live, f"{partition_col}={v}")
-        if os.path.exists(src):
-            os.rename(src, os.path.join(olddir, f"{partition_col}={v}"))
-    for name in os.listdir(staged):
-        if "=" in name:
-            os.rename(os.path.join(staged, name), os.path.join(live, name))
-    shutil.rmtree(staged)
-    shutil.rmtree(olddir)
+    plan = {
+        "staged": staged,
+        "partitions": [f"{partition_col}={v}" for v in affected],
+        "runs": [os.path.basename(r.rstrip("/")) for r in runs],
+        "run": os.path.basename(runs[-1].rstrip("/")) if runs else None,
+    }
+    with open(os.path.join(olddir, f"{_SWAP_PLAN}.tmp"), "w") as fh:
+        json.dump(plan, fh)
+    os.rename(
+        os.path.join(olddir, f"{_SWAP_PLAN}.tmp"), os.path.join(olddir, _SWAP_PLAN)
+    )
+    _finish_swap(live, olddir, plan)
+
+
+def _finish_swap(live: str, olddir: str, plan: dict) -> None:
+    """The renames of a planned :func:`swap_partitions`, idempotent so
+    that a crash anywhere is finished by re-running them. Until the
+    ``_moved`` mark exists nothing staged is installed, so every
+    affected partition still live is the OLD copy, and every planned
+    run still live is an old run."""
+    import os
+    import shutil
+
+    if not os.path.exists(os.path.join(olddir, _SWAP_MOVED)):
+        for name in plan["partitions"]:
+            src = os.path.join(live, name)
+            if os.path.exists(src):
+                os.rename(src, os.path.join(olddir, name))
+        os.makedirs(os.path.join(olddir, RUNS_DIR), exist_ok=True)
+        for name in plan["runs"]:
+            src = os.path.join(live, RUNS_DIR, name)
+            if os.path.exists(src):
+                os.rename(src, os.path.join(olddir, RUNS_DIR, name))
+        os.mkdir(os.path.join(olddir, _SWAP_MOVED))
+    staged = plan["staged"]
+    if os.path.isdir(staged):
+        for name in os.listdir(staged):
+            if "=" in name:
+                os.rename(os.path.join(staged, name), os.path.join(live, name))
+        folded = os.path.join(staged, RUNS_DIR, _FOLDED_RUN)
+        if plan.get("run") and os.path.isdir(folded):
+            os.makedirs(os.path.join(live, RUNS_DIR), exist_ok=True)
+            os.rename(folded, os.path.join(live, RUNS_DIR, plan["run"]))
+        shutil.rmtree(staged)
+    # the plan leaves with the old copies in one rename: a crash while
+    # they are deleted leaves nothing the heal would restore
+    done = f"{live.rstrip('/')}.__upsert_done"
+    os.rename(olddir, done)
+    shutil.rmtree(done)
 
 
 def shed_tombstones(spark: SparkSession, path: str, ids: DataFrame, *, id_col: str) -> None:
@@ -455,43 +555,225 @@ def compact_partitioned_index(
 ) -> None:
     """Major compaction for a ``partitionBy(partition_col)`` parquet
     index root (LSH buckets, IVF/IVF-PQ cells): rewrite the data
-    without tombstoned rows AND fold the append generations of each
-    partition back into one file group, then clear the tombstones.
+    without tombstoned rows AND fold the runs appends left beside the
+    partitions (:func:`write_runs`) back into one file group per
+    partition, then clear the tombstones.
 
     Cost: one shuffle-free scan + partitioned rewrite of the index
     rows (the vectors/codes, never the source corpus — assignment is
     not recomputed). The ``_*`` meta sidecars are carried over
-    verbatim; the staged directory swaps in crash-safely
-    (:func:`swap_directory` — old content aside first, deleted last;
-    object stores version + flip a manifest)."""
+    verbatim; the runs are not (their rows are in the rewrite) and
+    vanish with the old root. The staged directory swaps in
+    crash-safely (:func:`swap_directory` — old content aside first,
+    deleted last; object stores version + flip a manifest)."""
     import os
     import shutil
 
+    heal_partition_swap(path)
     ver = begin_index_mutation(path)
-    live = anti_tombstones(scan_parquet(spark, path), path, id_col)
+    live = anti_tombstones(read_store(spark, path, partition_col), path, id_col)
     staged = f"{path.rstrip('/')}.__compact_staged"
     shutil.rmtree(staged, ignore_errors=True)
-    # guide §6: cluster rows by their target directory before the
-    # partitioned write — one writer-task run per directory
-    live.repartition(partition_col).write.mode("overwrite").partitionBy(
-        partition_col
-    ).parquet(staged)
+    write_partitioned(live, staged, partition_col)
     commit_index_mutation(path, ver)  # claim before the visible swap; the
     # marks live in the sibling {root}.__index_version dir and survive
     # the whole-root swap below untouched
     for name in os.listdir(path):
         src = os.path.join(path, name)
         # meta sidecars only: underscore-prefixed dirs that are not the
-        # tombstones and not `__col=value` partition directories (the
-        # partition columns here are themselves underscore-prefixed)
+        # tombstones or runs and not `__col=value` partition directories
+        # (the partition columns here are themselves underscore-prefixed)
         if (
             name.startswith("_")
             and "=" not in name
-            and name != TOMBSTONE_DIR
+            and name not in (TOMBSTONE_DIR, RUNS_DIR)
             and os.path.isdir(src)
         ):
             shutil.copytree(src, os.path.join(staged, name))
     swap_directory(staged, path)
+
+
+def write_partitioned(df: DataFrame, root: str, partition_col: str) -> None:
+    """The one partitioned index write (builds, compactions, upsert
+    staging): ``df`` overwrites ``root`` as one ``partition_col=value``
+    directory per key. Rows are clustered by their target directory
+    first (guide §6): one writer-task run per directory instead of a
+    tasks×dirs small-file storm; AQE coalesces the exchange output.
+    Appends do not come here — they write one run (:func:`write_runs`)."""
+    df.repartition(partition_col).write.mode("overwrite").partitionBy(
+        partition_col
+    ).parquet(root)
+
+
+def stage_rewrite(
+    content: DataFrame,
+    staged: str,
+    partition_col: str,
+    runs: list = (),
+    drop_ids: DataFrame | None = None,
+) -> list[str]:
+    """Stage an upsert's replacement for one store at ``staged``:
+    ``content`` as the affected partition directories
+    (:func:`write_partitioned`) and, when some of the store's ``runs``
+    (from :func:`list_runs`) hold a row of the ids in ``drop_ids`` (one
+    column, named like the store's id column), those runs' rows minus
+    the ids as ONE sorted run under ``{staged}/_runs``. Returns the runs
+    folded, oldest first, for :func:`swap_partitions` to move aside
+    while it moves the replacement in; a run holding no batch id stays
+    live untouched. The partition rewrite thus stays at the partitions
+    the batch leaves or enters, and the runs cost one id-column read,
+    plus one read and one small write when a batch id is in a run."""
+    write_partitioned(content, staged, partition_col)
+    if not runs:
+        return []
+    spark, ids = content.sparkSession, drop_ids.columns[0]
+    tagged = [
+        scan_parquet(spark, r).select(ids, F.lit(i).alias("__run"))
+        for i, r in enumerate(runs)
+    ]
+    hit = (
+        reduce(DataFrame.unionByName, tagged)
+        .join(F.broadcast(drop_ids), ids, "left_semi")
+        .select("__run")
+        .distinct()
+        .collect()
+    )
+    folded = [runs[i] for i in sorted(r[0] for r in hit)]
+    if folded:
+        (
+            scan_parquet(spark, *folded)
+            .join(F.broadcast(drop_ids), ids, "left_anti")
+            .sortWithinPartitions(partition_col)
+            .write.parquet(f"{staged.rstrip('/')}/{RUNS_DIR}/{_FOLDED_RUN}")
+        )
+    return folded
+
+
+def write_runs(path: str, entry_version: int, runs: list) -> int:
+    """Append one sorted run to each store of an index: ``runs`` holds
+    ``(df, root, partition_col)`` per store, ``path`` is the index
+    whose mutation version ``entry_version`` was read at entry
+    (:func:`begin_index_mutation`). Returns the claimed version.
+
+    Each batch is sorted by its partition key within its partitions —
+    no shuffle — and written as plain parquet into a hidden staging
+    directory under ``{root}/_runs``. Only then is the version claimed
+    (:func:`commit_index_mutation`; a loser removes its staging and
+    raises, having published nothing), and each run is published with
+    ONE rename to ``{root}/_runs/run-v{N}``: all of a run is visible or
+    none of it. An append therefore writes O(batch) files, however
+    many partition directories its rows hash to. Readers see the runs
+    beside the partitions (:func:`read_store`) until a compaction folds
+    them into the partitions or an upsert into one replacement run. The
+    renames of a multi-store index are separate, so a crash between
+    them leaves the earlier stores' runs published — the same partial
+    state the store-by-store writes before them could leave."""
+    import os
+    import shutil
+    import uuid
+
+    staged = []
+    try:
+        for df, root, partition_col in runs:
+            tmp = f"{root.rstrip('/')}/{RUNS_DIR}/.staging-{uuid.uuid4().hex}"
+            staged.append((tmp, root))
+            df.sortWithinPartitions(partition_col).write.parquet(tmp)
+        version = commit_index_mutation(path, entry_version)
+    except BaseException:
+        for tmp, _ in staged:
+            shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    for tmp, root in staged:
+        dst = f"{root.rstrip('/')}/{RUNS_DIR}/run-v{version}"
+        if os.path.exists(dst):  # marks reset (a copied index): keep both
+            dst = f"{dst}-{uuid.uuid4().hex[:8]}"
+        os.rename(tmp, dst)
+    return version
+
+
+def list_runs(root: str) -> list[str]:
+    """The published runs of a partitioned store, oldest version
+    first — a driver-local listing like :func:`has_data_files`. Staging
+    directories and runs without a data file are left out."""
+    import os
+    import re
+
+    d = f"{root.rstrip('/')}/{RUNS_DIR}"
+    try:
+        names = os.listdir(d)
+    except (FileNotFoundError, NotADirectoryError):
+        return []
+    runs = [n for n in names if re.fullmatch(r"run-v\d+(-\w+)?", n)]
+    runs.sort(key=lambda n: (int(re.match(r"run-v(\d+)", n).group(1)), n))
+    return [f"{d}/{n}" for n in runs if has_data_files(f"{d}/{n}")]
+
+
+def read_store(
+    spark: SparkSession,
+    root: str,
+    partition_col: str,
+    values=None,
+    *,
+    runs: list | None = None,
+) -> DataFrame:
+    """Every live row of a partitioned store: the ``partition_col=value``
+    directories united with the runs appends published beside them
+    (:func:`write_runs`). ``values`` restricts the read to those keys —
+    only the probed directories that exist are read, as explicit paths
+    under ``basePath`` (Spark lists just those, never the whole root),
+    with a static ``isin`` filter that keeps ``PartitionFilters`` on
+    the plan, and the runs are read under the same filter. A probe
+    whose directory is missing contributes no rows; when none exists,
+    one existing directory is read under the filter, so no row passes
+    and the frame keeps the store's schema. ``runs`` (from
+    :func:`list_runs`) pins the runs to read, for a caller that must
+    fold exactly the runs it later moves aside (``[]`` reads the
+    directories alone); by default they are listed here.
+
+    The partition column keeps the type Spark infers for the
+    directories (runs store it as the writer's type and are cast to
+    it). With no run, the frame is the directory read alone — no plan
+    node and no job are added. Every read goes through
+    :func:`sources.files.scan_parquet`, so its schema comes from the
+    session's cache or the footer Spark wrote, never an inference
+    job."""
+    import os
+
+    root = root.rstrip("/")
+    runs = list_runs(root) if runs is None else runs
+    parts = sorted(
+        n for n in (os.listdir(root) if os.path.isdir(root) else [])
+        if n.startswith(f"{partition_col}=")
+    )
+    if values is not None:
+        values = sorted(set(values))
+        present = [f"{root}/{partition_col}={v}" for v in values]
+        present = [p for p in present if os.path.isdir(p)] or [
+            f"{root}/{n}" for n in parts[:1]
+        ]
+
+    def probed(df: DataFrame) -> DataFrame:
+        return df if values is None else df.filter(F.col(partition_col).isin(values))
+
+    base = None
+    if values is not None and present:
+        base = probed(scan_parquet(spark, *present, base_path=root))
+    elif parts or not runs:
+        base = probed(scan_parquet(spark, root))
+    if not runs:
+        return base
+    run_rows = probed(scan_parquet(spark, *runs))
+    if base is None:
+        return run_rows
+    ptype = base.schema[partition_col].dataType
+    return base.unionByName(
+        run_rows.select(
+            *[
+                F.col(c).cast(ptype).alias(c) if c == partition_col else F.col(c)
+                for c in base.columns
+            ]
+        )
+    )
 
 
 def apply_allowed_ids(
@@ -551,8 +833,8 @@ def collect_probe_batch(
     :func:`batch_ceiling_error` — the ``check_query_batch`` contract
     without its separate count job. ``max_queries=None`` opts out of
     the ceiling (the batch is still collected). The rows feed both the
-    static partition filter and :func:`probe_frame`, so the caller's
-    frame is never read again.
+    static partition filter and :func:`sources.arrow.arrow_frame`, so
+    the caller's frame is never read again.
 
     Returns the rows as ``dict`` records (structs as nested dicts).
     Collected through Arrow: over a multi-partition batch that is one
@@ -564,57 +846,3 @@ def collect_probe_batch(
     if max_queries is not None and len(rows) > max_queries:
         raise batch_ceiling_error(op, max_queries)
     return rows
-
-
-def probe_frame(spark: SparkSession, records: list[dict], schema) -> DataFrame:
-    """The probe/broadcast side of a search, built from collected rows
-    (``dict`` records matching ``schema``) with ONE
-    ``createDataFrame(pyarrow.Table)`` — O(1) JVM calls per batch,
-    where a plan of literal rows costs O(rows) — and typed exactly as
-    ``schema``, so joins and scores see the values the batch frame
-    carried."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    table = pa.Table.from_pylist(records, schema=to_arrow_schema(schema))
-    return spark.createDataFrame(table, schema=schema)
-
-
-def read_probed_partitions(
-    spark: SparkSession, root: str, partition_col: str, values
-) -> DataFrame:
-    """Read the ``partition_col=value`` directories of a
-    ``partitionBy`` index root for the probed ``values`` only. The
-    directories that exist (a driver-local check, like every other
-    indexstore primitive) are read as explicit paths under
-    ``basePath`` — Spark lists just those, never the whole root — and
-    the static ``isin`` filter stays on the scan, so the plan still
-    carries ``PartitionFilters`` on ``partition_col``. A probe whose
-    directory is missing (an empty cell or bucket) contributes no
-    rows. When none of them exists, one existing directory is read
-    under the same filter — no row passes it, and the frame keeps the
-    index's schema; only an index with no partition directory at all
-    falls back to reading the root. Every read goes through
-    :func:`sources.files.scan_parquet`, so its schema comes from the
-    session's cache or the footer Spark wrote, never an inference
-    job."""
-    import os
-
-    root = root.rstrip("/")
-    vals = sorted(set(values))
-    present = [
-        f"{root}/{partition_col}={v}"
-        for v in vals
-        if os.path.isdir(f"{root}/{partition_col}={v}")
-    ]
-    if not present:
-        present = [
-            f"{root}/{name}"
-            for name in sorted(os.listdir(root))
-            if name.startswith(f"{partition_col}=")
-        ][:1]
-    if present:
-        df = scan_parquet(spark, *present, base_path=root)
-    else:
-        df = scan_parquet(spark, root)
-    return df.filter(F.col(partition_col).isin(vals))

@@ -1545,8 +1545,10 @@ def profile_read_store(spark: SparkSession, path: str) -> DataFrame:
 
     from pyspark.errors import AnalysisException
 
+    from spatially_databricks_etl_spark.sources.files import scan_parquet
+
     try:
-        stats = spark.read.parquet(os.path.join(path, "stats"))
+        stats = scan_parquet(spark, os.path.join(path, "stats"))
     except AnalysisException:
         # every batch partition deleted — schema can no longer be
         # inferred from files; an empty store is a valid store

@@ -14,6 +14,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from spatially_databricks_etl_spark.sources.arrow import arrow_frame
+
 
 def ensure_parallelism(df: DataFrame, *key_cols: str) -> DataFrame:
     """Repartition up to the cluster's default parallelism when the
@@ -1070,8 +1072,8 @@ def distributed_row_number(
     for pid, n in counts:
         offsets[pid] = acc
         acc += n
-    off_df = df.sparkSession.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "__pid int, __off long"
+    off_df = arrow_frame(
+        df.sparkSession, list(offsets.items()), "__pid int, __off long"
     )
     w = Window.partitionBy("__pid").orderBy(*order_cols)
     return (

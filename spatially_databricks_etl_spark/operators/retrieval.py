@@ -897,10 +897,10 @@ def bm25_search_index(
     from spatially_databricks_etl_spark.operators.indexstore import (
         apply_allowed_ids,
         collect_probe_batch,
-        probe_frame,
         read_meta_sidecar,
     )
     from spatially_databricks_etl_spark.operators.relational import top_k_per_group
+    from spatially_databricks_etl_spark.sources.arrow import arrow_frame
 
     spark = queries.sparkSession
     meta = read_meta_sidecar(f"{path}/_bm25_meta", "bm25_meta_json")
@@ -912,7 +912,7 @@ def bm25_search_index(
     pairs = dict.fromkeys(
         (r["query_id"], t) for r in rows for t in (r["__terms"] or [])
     )
-    qterms = probe_frame(
+    qterms = arrow_frame(
         spark,
         [{"query_id": qid, "term": t} for qid, t in pairs],
         StructType([q.schema["query_id"], StructField("term", StringType())]),

@@ -34,17 +34,18 @@ from spatially_databricks_etl_spark.operators.indexstore import (
     clear_tombstones,
     collect_probe_batch,
     compact_partitioned_index,
-    probe_frame,
     read_meta_sidecar,
-    read_probed_partitions,
+    read_store,
     write_meta_sidecar,
+    write_partitioned,
+    write_runs,
     write_tombstones,
 )
 from spatially_databricks_etl_spark.operators.relational import (
     ensure_parallelism,
     top_k_per_group,
 )
-from spatially_databricks_etl_spark.sources.files import scan_parquet
+from spatially_databricks_etl_spark.sources.arrow import arrow_frame
 
 #: Default ceiling for the broadcast-sized query-batch contract every
 #: ANN entry point shares. Above this, the collected/broadcast query
@@ -259,12 +260,7 @@ def lsh_write_index(
     bucketed = corpus.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
     ).withColumn("__bucket", lsh_bucket("embedding", hp))
-    # repartition by the partition column before the partitioned write
-    # (guide §6): one writer-task run per directory instead of a
-    # tasks×dirs small-file storm; AQE coalesces the exchange output
-    bucketed.repartition("__bucket").write.mode("overwrite").partitionBy(
-        "__bucket"
-    ).parquet(path)
+    write_partitioned(bucketed, path, "__bucket")
     write_meta_sidecar(
         f"{path}/_lsh_meta",
         "lsh_params_json",
@@ -283,29 +279,15 @@ def lsh_append_index(
     :func:`lsh_write_index`): the batch buckets with the sidecar's
     (planes, dim, seed) — hyperplanes re-derive deterministically, and
     bucket assignment is per-vector, so append ≡ rebuild exactly — and
-    lands as additional files inside the existing ``__bucket=N``
-    partition directories; the standing corpus is never re-bucketed.
+    lands as ONE sorted run beside the ``__bucket=N`` partition
+    directories (``indexstore.write_runs``: O(batch) files, however many
+    buckets it hits); the standing corpus is never re-bucketed.
     Caller contract: batch ids are new. Unlike the learned IVF/PQ
     models, random hyperplanes never go stale under distribution
     drift — only bucket-size SKEW can grow; monitor it and re-seed +
     rewrite if a mega-bucket forms (the same hazard note as
     :func:`lsh_bucketed_topk`)."""
-    from spatially_databricks_etl_spark.operators.indexstore import (
-        begin_index_mutation,
-        commit_index_mutation,
-    )
-
-    ver = begin_index_mutation(path)
-    bucketed = _lsh_assigned(
-        new_vecs.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
-        ),
-        path,
-    )
-    commit_index_mutation(path, ver)  # claim before the visible append
-    bucketed.repartition("__bucket").write.mode("append").partitionBy(
-        "__bucket"
-    ).parquet(path)
+    _vector_append_index(new_vecs, path, _lsh_assigned, "__bucket", id_col, vec_col)
 
 
 def lsh_search_index(
@@ -334,10 +316,10 @@ def lsh_search_index(
         F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
     ).withColumn("__bucket", lsh_bucket("__qvec", hp))
     rows = collect_probe_batch(q, "lsh_search_index", max_queries)
-    probes = probe_frame(spark, rows, q.schema)
+    probes = arrow_frame(spark, rows, q.schema)
     corpus = apply_allowed_ids(
         anti_tombstones(
-            read_probed_partitions(
+            read_store(
                 spark, path, "__bucket", [r["__bucket"] for r in rows]
             ),
             path,
@@ -610,10 +592,7 @@ def ivf_write_index(
     assigned = corpus.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
     ).withColumn("__cell", F.array_max(cell_sims(F.col("embedding"))).getField("cell"))
-    # guide §6: cluster rows by their target directory before the write
-    assigned.repartition("__cell").write.mode("overwrite").partitionBy(
-        "__cell"
-    ).parquet(path)
+    write_partitioned(assigned, path, "__cell")
     write_meta_sidecar(f"{path}/_ivf_meta", "centroids_json", centroids)
 
 
@@ -629,10 +608,13 @@ def ivf_append_index(
     contract matching the MinHash and BM25 index appenders: only the
     BATCH is assigned (cell assignment is per-vector and uses the
     index's own pinned centroids from the sidecar, so append ≡ rebuild
-    exactly), and its rows land as additional files inside the
-    existing ``__cell=N`` partition directories — the standing corpus
+    exactly), and its rows land as ONE sorted run beside the
+    ``__cell=N`` partition directories (``indexstore.write_runs``:
+    O(batch) files, however many cells it hits) — the standing corpus
     is never re-read, never rewritten, and searches keep the same
-    partition-pruned plan. Caller contract: batch ids are new.
+    partition-pruned plan, reading the runs under the same cell
+    filter until a compaction or upsert folds them in. Caller
+    contract: batch ids are new.
 
     Drift note (the honest quantizer trade): appended vectors are
     quantized by the ORIGINAL centroids. If the ingest distribution
@@ -641,22 +623,7 @@ def ivf_append_index(
     monitors over the ``__cell`` column) and retrain + rewrite via
     :func:`ivf_build` + :func:`ivf_write_index` when it matters,
     exactly as FAISS re-trains an IVF list structure."""
-    from spatially_databricks_etl_spark.operators.indexstore import (
-        begin_index_mutation,
-        commit_index_mutation,
-    )
-
-    ver = begin_index_mutation(path)
-    assigned = _ivf_assigned(
-        new_vecs.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
-        ),
-        path,
-    )
-    commit_index_mutation(path, ver)  # claim before the visible append
-    assigned.repartition("__cell").write.mode("append").partitionBy(
-        "__cell"
-    ).parquet(path)
+    _vector_append_index(new_vecs, path, _ivf_assigned, "__cell", id_col, vec_col)
 
 
 def ivf_read_centroids(spark, path: str) -> list[list[float]]:
@@ -699,12 +666,12 @@ def ivf_search_index(
         F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
     ).withColumn("__cells", _nearest_cells(cell_sims, nprobe))
     rows = collect_probe_batch(routed, "ivf_search_index", max_queries)
-    probes = probe_frame(spark, rows, routed.schema).select(
+    probes = arrow_frame(spark, rows, routed.schema).select(
         "query_id", "__qvec", F.explode("__cells").alias("__cell")
     )
     corpus = apply_allowed_ids(
         anti_tombstones(
-            read_probed_partitions(
+            read_store(
                 spark, path, "__cell", [c for r in rows for c in r["__cells"]]
             ),
             path,
@@ -941,10 +908,7 @@ def ivfpq_write_index(
         vec_col="embedding",
         out_col="pq_code",
     ).withColumn("__cell", F.array_max(cell_sims(F.col("embedding"))).getField("cell"))
-    # guide §6: cluster rows by their target directory before the write
-    assigned.repartition("__cell").write.mode("overwrite").partitionBy(
-        "__cell"
-    ).parquet(path)
+    write_partitioned(assigned, path, "__cell")
     write_meta_sidecar(
         f"{path}/_ivfpq_meta",
         "ivfpq_json",
@@ -962,28 +926,14 @@ def ivfpq_append_index(
     """Append a NEW vector batch to a persisted IVF-PQ index (see
     :func:`ivfpq_write_index`): the batch is coarse-assigned AND
     PQ-encoded with the index's own pinned models (sidecar), then
-    appended into the existing cell partition directories — per-vector
-    deterministic, so append ≡ rebuild exactly under fixed models.
+    written as one sorted run beside the cell partition directories —
+    per-vector deterministic, so append ≡ rebuild exactly under fixed
+    models.
     Same caller contract and quantizer-drift note as
     :func:`ivf_append_index` (stale codebooks additionally inflate ADC
     error for drifted batches; retrain + rewrite when cell-size or
     residual drift says so)."""
-    from spatially_databricks_etl_spark.operators.indexstore import (
-        begin_index_mutation,
-        commit_index_mutation,
-    )
-
-    ver = begin_index_mutation(path)
-    assigned = _ivfpq_assigned(
-        new_vecs.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
-        ),
-        path,
-    )
-    commit_index_mutation(path, ver)  # claim before the visible append
-    assigned.repartition("__cell").write.mode("append").partitionBy(
-        "__cell"
-    ).parquet(path)
+    _vector_append_index(new_vecs, path, _ivfpq_assigned, "__cell", id_col, vec_col)
 
 
 def ivfpq_search_index(
@@ -1065,7 +1015,7 @@ def ivfpq_search_index(
         for i in range(len(qids))
     ]
     cells = sorted({c for cs in probe_sets for c in cs})
-    cell_rows = read_probed_partitions(spark, path, "__cell", cells)
+    cell_rows = read_store(spark, path, "__cell", cells)
 
     codes = apply_allowed_ids(
         anti_tombstones(
@@ -1134,7 +1084,7 @@ def ivfpq_search_index(
     exact = (
         short.join(vecs, "vec_id")
         .join(
-            F.broadcast(probe_frame(spark, qrows, q.schema)),
+            F.broadcast(arrow_frame(spark, qrows, q.schema)),
             "query_id",
         )
         .withColumn("cosine_sim", cosine_similarity(F.col("__qvec"), F.col("embedding")))
@@ -1214,12 +1164,15 @@ def _vector_upsert_index(
        upsert ≡ rebuild stays an identity);
     2. the AFFECTED partitions = the batch ids' current partitions ∪
        the batch's newly-assigned partitions — everything else on
-       disk is untouched, which is what keeps the cost
-       O(affected partitions), not O(index);
-    3. their replacement content = (current rows of those partitions
-       minus batch ids minus tombstoned rows — upsert compacts what
-       it touches) ∪ the assigned batch, staged to a sibling
-       directory and swapped in (never overwrite what is being read);
+       disk is untouched, which is what keeps the cost O(affected
+       partitions + runs), not O(index);
+    3. their replacement content = (current rows of those partition
+       directories minus batch ids minus tombstoned rows — upsert
+       compacts what it touches) ∪ the assigned batch, and the rows
+       of the appends' runs that hold a batch id, minus the batch
+       ids, become one replacement run; both are staged to a sibling
+       directory and swapped in (never overwrite what is being
+       read), the folded runs moving aside in the same swap;
     4. batch ids leave the tombstone store (a previously-deleted id
        that is re-ingested must become searchable again).
 
@@ -1229,14 +1182,13 @@ def _vector_upsert_index(
     deliberately does NOT get an upsert — a zero-token document has
     no postings row, so re-ingest detection from the index alone is
     unsound there (a doc-id manifest would be required)."""
-    import os
-    import shutil
-
     from spatially_databricks_etl_spark.operators.indexstore import (
         begin_index_mutation,
         commit_index_mutation,
         heal_partition_swap,
+        list_runs,
         shed_tombstones,
+        stage_rewrite,
         swap_partitions,
     )
 
@@ -1251,35 +1203,56 @@ def _vector_upsert_index(
         path,
     ).persist()
     batch_ids = assigned.select("vec_id").distinct()
-    idx = scan_parquet(spark, path)
-    old_parts = {
-        r[pcol]
-        for r in idx.join(F.broadcast(batch_ids), "vec_id")
-        .select(pcol)
-        .distinct()
-        .collect()
-    }
-    new_parts = {r[pcol] for r in assigned.select(pcol).distinct().collect()}
-    affected = sorted(old_parts | new_parts)
+    runs = list_runs(path)
+    idx = read_store(spark, path, pcol, runs=runs)
+    affected = sorted(
+        {
+            r[pcol]
+            for r in idx.join(F.broadcast(batch_ids), "vec_id")
+            .select(pcol)
+            .unionByName(assigned.select(pcol))
+            .distinct()
+            .collect()
+        }
+    )
 
     keep = (
-        anti_tombstones(idx.filter(F.col(pcol).isin(affected)), path, "vec_id")
+        anti_tombstones(read_store(spark, path, pcol, affected, runs=[]), path, "vec_id")
         .join(F.broadcast(batch_ids), "vec_id", "left_anti")
     )
     content = keep.select(*assigned.columns).unionByName(assigned)
     staged = f"{path.rstrip('/')}.__upsert_staged"
-    shutil.rmtree(staged, ignore_errors=True)
-    # guide §6: cluster rows by their target directory before the write
-    content.repartition(pcol).write.partitionBy(pcol).parquet(staged)
+    runs = stage_rewrite(content, staged, pcol, runs, batch_ids)
     assigned.unpersist()
     commit_index_mutation(path, ver)  # claim before the first visible swap
-    # crash-safe partition swap (live copies aside first, deleted last)
-    swap_partitions(staged, path, pcol, affected)
+    # crash-safe partition swap (live copies and old runs aside first,
+    # deleted last)
+    swap_partitions(staged, path, pcol, affected, runs)
 
     # re-ingested ids must shed any standing tombstone (their old
     # rows are physically gone from the affected partitions, so the
     # shed cannot resurrect stale content)
     shed_tombstones(spark, path, batch_ids, id_col="vec_id")
+
+
+def _vector_append_index(
+    new_vecs: DataFrame, path: str, assigned_fn, pcol: str, id_col: str, vec_col: str
+) -> None:
+    """Shared append for the vector-index family: the batch assigns
+    under the index's pinned models (``assigned_fn``, shared with the
+    upsert) and is published as one sorted run
+    (:func:`indexstore.write_runs`), claimed against the version read
+    here at entry."""
+    from spatially_databricks_etl_spark.operators.indexstore import (
+        begin_index_mutation,
+    )
+
+    ver = begin_index_mutation(path)
+    assigned = assigned_fn(
+        new_vecs.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")),
+        path,
+    )
+    write_runs(path, ver, [(assigned, path, pcol)])
 
 
 def _lsh_assigned(new_vecs: DataFrame, path: str) -> DataFrame:
@@ -1341,7 +1314,7 @@ def ivfpq_upsert_index(
 
 def lsh_compact_index(spark, path: str) -> None:
     """Major compaction of a persisted LSH index: physically drop
-    tombstoned vectors, fold append generations into one file group
+    tombstoned vectors, fold the appends' runs into one file group
     per bucket directory, clear the tombstones. Results identical
     before/after (pinned by test)."""
     compact_partitioned_index(spark, path, id_col="vec_id", partition_col="__bucket")

@@ -164,7 +164,9 @@ def versioned_read(
             f"versioned_read: version {v} not available (have {m['versions']} "
             "— it may have been vacuumed)"
         )
-    return spark.read.parquet(os.path.join(path, "_snapshots", f"v={v}"))
+    from spatially_databricks_etl_spark.sources.files import scan_parquet
+
+    return scan_parquet(spark, os.path.join(path, "_snapshots", f"v={v}"))
 
 
 def versioned_diff(

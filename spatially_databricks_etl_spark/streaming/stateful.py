@@ -928,12 +928,14 @@ def index_ingest_sink(path: str, append, *, empty_batches_log: bool = True):
     """
     from pyspark.errors import AnalysisException
 
+    from spatially_databricks_etl_spark.sources.files import scan_parquet
+
     log_path = f"{path}/_ingest_log"
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         try:
-            done = spark.read.parquet(log_path).filter(
+            done = scan_parquet(spark, log_path).filter(
                 F.col("batch_id") == int(batch_id)
             ).limit(1).count()
         except AnalysisException:

@@ -1,6 +1,6 @@
 """The shared probe path of the persisted-index searches
-(``operators/indexstore.py``: ``collect_probe_batch`` / ``probe_frame`` /
-``read_probed_partitions``): one read of the caller's batch, a pinned
+(``operators/indexstore.py``: ``collect_probe_batch`` / ``read_store``;
+``sources/arrow.py``: ``arrow_frame``): one read of the caller's batch, a pinned
 job count per family, probes whose partition directory is missing, the
 batch ceiling, driver-local existence checks for optional stores, and
 the release of superseded local checkpoints."""

@@ -150,3 +150,73 @@ def test_non_local_uri_bypasses_the_cache(spark, tmp_path, scheme):
 
 def test_missing_path_is_not_cached(spark, tmp_path):
     assert _schema_key(spark, [str(tmp_path / "absent.parquet")], None) is None
+
+
+def test_store_reads_resolve_their_schema_once(spark, tmp_path):
+    """The profile store, a versioned snapshot and a saved merge table
+    read through ``scan_parquet``: a repeated read runs no job beyond
+    what it collects."""
+    from spatially_databricks_etl_spark.operators.curate import (
+        bpe_load_merges,
+        bpe_save_merges,
+    )
+    from spatially_databricks_etl_spark.operators.profile import (
+        profile_read_store,
+        profile_write_store,
+    )
+    from spatially_databricks_etl_spark.sinks.versioned import (
+        _read_manifest,
+        versioned_read,
+        versioned_write,
+    )
+    from spatially_databricks_etl_spark.sources.arrow import arrow_frame
+
+    df = spark.createDataFrame([(1, 2.5), (2, 3.5)], "a long, b double")
+    prof = str(tmp_path / "prof")
+    profile_write_store(df, prof, cols={"a": 0, "b": 2}, batch_id="b1")
+    first, _ = _jobs(spark, lambda: profile_read_store(spark, prof))
+    again, jobs = _jobs(spark, lambda: profile_read_store(spark, prof))
+    assert jobs == 0
+    assert sorted(again.collect()) == sorted(first.collect())
+
+    snap = str(tmp_path / "snap")
+    versioned_write(df, snap)
+    versioned_read(spark, snap)
+    _, manifest_jobs = _jobs(spark, lambda: _read_manifest(spark, snap))
+    got, jobs = _jobs(spark, lambda: versioned_read(spark, snap))
+    assert jobs == manifest_jobs
+    assert sorted(got.collect()) == sorted(df.collect())
+
+    merges = str(tmp_path / "merges")
+    bpe_save_merges(
+        arrow_frame(
+            spark,
+            [(2, "b", "c", 3), (1, "a", "b", 5)],
+            "round long, left_sym string, right_sym string, pair_count long",
+        ),
+        merges,
+    )
+    bpe_load_merges(spark, merges)
+    _, collect_jobs = _jobs(
+        spark, lambda: scan_parquet(spark, merges).orderBy("round").collect()
+    )
+    rules, jobs = _jobs(spark, lambda: bpe_load_merges(spark, merges))
+    assert rules == [("a", "b"), ("b", "c")]
+    assert jobs == collect_jobs
+
+
+def test_arrow_frame_is_a_local_relation(spark):
+    """``arrow_frame`` types rows exactly as ``createDataFrame(list)``
+    does, from tuples or records, and collecting it runs no job."""
+    from spatially_databricks_etl_spark.sources.arrow import arrow_frame
+
+    ddl = "__pid int, __off long, __s string"
+    rows = [(0, 0, "a"), (1, 7, None), (2, 2**40, "é")]
+    built, jobs = _jobs(spark, lambda: arrow_frame(spark, rows, ddl).collect())
+    assert jobs == 0
+    ref = spark.createDataFrame(rows, ddl)
+    assert arrow_frame(spark, rows, ddl).schema == ref.schema
+    assert built == ref.collect()
+    records = [dict(zip(("__pid", "__off", "__s"), r)) for r in rows]
+    assert arrow_frame(spark, records, ref.schema).collect() == built
+    assert arrow_frame(spark, [], ddl).collect() == []
